@@ -22,11 +22,13 @@ import java.util
   * `loadTable` serves a [[GraftSparkTable]] (SupportsRead + SupportsWrite);
   * writes commit through the snapshot log via the V1 write fallback. For
   * reads, sessions built with [[GraftSparkSessionExtensions]] swap
-  * read-position relations for the snapshot's self-contained SQL view
-  * over `parquet.`path`` relations ([[GraftTable.viewSql]]) — full
+  * read-position relations for the analyzed plan of the snapshot's
+  * DataFrame ([[GraftTable.dfAt]], the plan `toDF` builds) — full
   * filter/column pushdown into vectorized parquet scans; other sessions
   * fall back to the table's V1Scan. Snapshot isolation comes free: each
   * query plans against the snapshot current at resolution time.
+  * [[loadView]] still serves the snapshot as view SQL text
+  * ([[GraftTable.viewSql]]) for callers of the `ViewCatalog` API.
   *
   * Configuration:
   * {{{

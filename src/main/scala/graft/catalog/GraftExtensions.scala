@@ -12,17 +12,21 @@ import graft.table.GraftTable
   * [[GraftCatalog.loadTable]] gives every `graft.<ns>.<table>` reference a
   * real DSv2 [[GraftSparkTable]]; writes (`df.writeTo(...).append()`,
   * `INSERT INTO`) flow through its SupportsWrite as vanilla Spark plans.
-  * For READS this rule swaps the resolved relation for the snapshot's
-  * self-contained SQL view ([[GraftTable.viewSql]] re-parsed), so scans
-  * stay vectorized multi-path parquet reads with full filter/column
-  * pushdown — strictly better than funnelling rows through the table's
-  * V1Scan fallback. Iceberg wires its analyzer extensions the same way.
+  * For READS this rule swaps the resolved relation for the analyzed plan
+  * of [[GraftTable.dfAt]] — the same snapshot-to-plan builder `toDF`
+  * uses: one parquet relation over every data dir (explicit read schema,
+  * `recursiveFileLookup`, so no schema-inference job and no partition
+  * discovery) and one over every delete file, with the version-guarded
+  * anti-join. Scans stay vectorized multi-path parquet reads with full
+  * filter/column pushdown — strictly better than funnelling rows through
+  * the table's V1Scan fallback. Iceberg wires its analyzer extensions
+  * the same way.
   *
   * ExprId stability: by the time this rule runs, parent operators may
   * already reference the relation's output attributes, so the substituted
   * plan must expose the SAME exprIds. The placeholder holds the original
-  * output; once the parsed view subtree resolves, a projection aliases
-  * the view's columns back onto the original attribute ids.
+  * output; a projection aliases the substituted plan's columns back onto
+  * the original attribute ids.
   *
   * Install at session build time:
   * {{{
@@ -55,8 +59,8 @@ case class ResolveGraftTables(spark: SparkSession) extends Rule[LogicalPlan] {
     // With V2 bucketing enabled, SPJ-shaped tables KEEP their DSv2
     // relation: the partition-reporting GraftBucketedScan is what makes
     // co-bucketed joins shuffle-free, and it matches the view path on
-    // pushdown (same parquet reader function). Everything else still gets
-    // the parquet-view swap. The snapshot is loaded ONCE per relation per
+    // pushdown (same parquet reader function). Everything else gets the
+    // `dfAt` plan swap. The snapshot is loaded ONCE per relation per
     // rule pass (the analyzer iterates to fixpoint; per-check loads would
     // multiply driver metadata I/O on object stores).
     val spjOn = spark.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
@@ -139,11 +143,7 @@ case class ResolveGraftTables(spark: SparkSession) extends Rule[LogicalPlan] {
             !pendingMetaRef =>
         val gst = r.table.asInstanceOf[GraftSparkTable]
         val gt = gst.graftTable
-        val snap = gst.asOfVersion.map { v =>
-          val s = gt.snapshotAt(v)
-          require(s.op != "expired", s"snapshot v$v has been expired; cannot time travel to it")
-          s
-        }.getOrElse(gt.snapshot)
+        val snap = gst.readSnapshot(gt)
         // metadata columns (`_file`) resolve against the relation's
         // metadataOutput without widening its output — a referenced one
         // means the relation must KEEP its DSv2 scan (the flat Batch scan
@@ -161,13 +161,12 @@ case class ResolveGraftTables(spark: SparkSession) extends Rule[LogicalPlan] {
         if (usesMeta || gst.keepScan) r
         else if (spjOn && gst.asOfVersion.isEmpty && GraftSparkTable.spjEligible(snap)) r
         // pending POSITION deletes key on the reader-stamped (_file, _pos)
-        // identity — inexpressible as view SQL; keep the DSv2 scan, whose
+        // identity — only the DSv2 reader stamps it; keep that scan, whose
         // delete-aware reader applies them
         else if (snap.deletes.exists(_.keys == graft.table.GraftTable.PosDeleteKeys)) r
-        else GraftViewPlaceholder(r.output,
-          spark.sessionState.sqlParser.parsePlan(gt.viewSqlOf(snap)))
+        else GraftViewPlaceholder(r.output, gt.dfAt(snap).queryExecution.analyzed)
       case h: GraftViewPlaceholder if h.child.resolved =>
-        // rebind by NAME, not position: the view was rendered from the
+        // rebind by NAME, not position: the plan was built from the
         // CURRENT snapshot while h.output was resolved earlier in
         // analysis — under a concurrent schema change positional zip
         // would silently mislabel columns; a missing name fails loudly
@@ -224,16 +223,17 @@ case class ResolveGraftTables(spark: SparkSession) extends Rule[LogicalPlan] {
   *    ([[GraftTable.ContentPreservingOps]] — property/layout metadata
   *    and file reorganizations; a bounded walk, stale past 32 versions);
   *  - no time travel on the base relation, no positional deletes pending
-  *    on the MV (inexpressible as view SQL).
+  *    on the MV (their row identity needs the DSv2 reader).
   *
-  * The substituted subtree is the MV's self-contained parquet view SQL
-  * (equality deletes folded in — the MV is MoR-maintained), aliased onto
-  * the aggregate's output names; [[GraftViewPlaceholder]] then rebinds
+  * The substituted subtree is the analyzed [[GraftTable.dfAt]] plan of
+  * the MV (equality deletes applied — the MV is MoR-maintained), aliased
+  * onto the aggregate's output names; [[GraftViewPlaceholder]] then rebinds
   * the resolved columns onto the original exprIds, exactly like the
   * relation swap. Kill switch: `spark.graft.mv.rewrite.enabled=false`. */
 private[catalog] object GraftMvRewrite {
   import org.apache.spark.sql.catalyst.expressions.AttributeReference
   import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Sum}
+  import org.apache.spark.sql.functions.{lit, when}
   import org.apache.spark.sql.types.{DataType, LongType}
 
   private val MaxFreshnessWalk = 32
@@ -331,21 +331,20 @@ private[catalog] object GraftMvRewrite {
     }}
     if (!typesOk) return None
     if (!isFresh(gst, baseVersion, mvSnap.properties)) return None
-    // serve: alias the MV view's columns onto the aggregate's output
-    // names; the placeholder rebind then restores the original exprIds
-    def q(n: String) = s"`${n.replace("`", "``")}`"
+    // serve: alias the MV's columns onto the aggregate's output names;
+    // the placeholder rebind then restores the original exprIds
+    val mv = mvT.dfAt(mvSnap)
     val items = served.map { case (ne, k) =>
-      val expr = k match {
-        case GroupKey(c) => q(c)
-        case CountAll => "`n`"
-        case CountValue => "`nn`"
-        case SumValue => s"IF(`nn` = 0, CAST(NULL AS ${totalType.sql}), `total`)"
+      val c = k match {
+        case GroupKey(g) => mv(s"`${g.replace("`", "``")}`")
+        case CountAll => mv("n")
+        case CountValue => mv("nn")
+        case SumValue =>
+          when(mv("nn") === 0, lit(null).cast(totalType)).otherwise(mv("total"))
       }
-      s"$expr AS ${q(ne.name)}"
+      c.as(ne.name)
     }
-    val sql = s"SELECT ${items.mkString(", ")} FROM (\n${mvT.viewSqlOf(mvSnap)}\n)"
-    Some(GraftViewPlaceholder(agg.output,
-      spark.sessionState.sqlParser.parsePlan(sql)))
+    Some(GraftViewPlaceholder(agg.output, mv.select(items: _*).queryExecution.analyzed))
   }
 
   /** The MV's stamp covers the base's current version: equal, or every
@@ -583,10 +582,10 @@ private[catalog] object GraftCountFold {
     }
 }
 
-/** Holds a graft relation's original output attributes while the parsed
-  * view subtree underneath resolves; [[ResolveGraftTables]] then projects
-  * the resolved columns back onto those attribute ids. Never survives
-  * analysis (`resolved` is false until replaced). */
+/** Holds a graft relation's original output attributes over the
+  * substituted snapshot plan; [[ResolveGraftTables]] then projects its
+  * columns back onto those attribute ids. Never survives analysis
+  * (`resolved` is false until replaced). */
 case class GraftViewPlaceholder(output: Seq[Attribute], child: LogicalPlan)
     extends UnaryNode {
   override lazy val resolved: Boolean = false

@@ -46,7 +46,7 @@ final class GraftSparkTable(val dir: String, tableName: String,
                             // error, never side-effect a table onto disk
                             pendingCreate: Option[(StructType, Seq[PartitionField])] = None,
                             // .option("keepScan", true): never swap this
-                            // relation for its SQL view — required when a
+                            // relation for its snapshot plan — required when a
                             // LATER DataFrame transformation will reference
                             // metadata columns (the bare load() analyzes
                             // before any projection exists, so the rewrite
@@ -74,17 +74,16 @@ final class GraftSparkTable(val dir: String, tableName: String,
 
   /** The snapshot this relation reads: pinned for `VERSION AS OF` /
     * `TIMESTAMP AS OF` relations, current otherwise. */
-  def readSnapshot: graft.table.Snapshot =
+  def readSnapshot: graft.table.Snapshot = readSnapshot(graftTable)
+
+  /** [[readSnapshot]] through an already-loaded handle of this table. */
+  def readSnapshot(gt: GraftTable): graft.table.Snapshot =
     asOfVersion.map { v =>
-      val s = graftTable.snapshotAt(v)
+      val s = gt.snapshotAt(v)
       require(s.op != "expired",
         s"snapshot v$v has been expired (expireSnapshots); cannot time travel to it")
       s
-    }.getOrElse(graftTable.snapshot)
-
-  /** The snapshot's self-contained SQL view (what the extensions rule
-    * swaps read relations for) — version-pinned when this table is. */
-  def readViewSql: String = graftTable.viewSqlOf(readSnapshot)
+    }.getOrElse(gt.snapshot)
 
   override def name(): String =
     tableName + asOfVersion.map(v => s"@v$v").getOrElse("")

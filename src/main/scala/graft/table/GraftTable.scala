@@ -221,8 +221,23 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     * where it does not. A filesystem with NO AbstractFileSystem binding
     * (getFileContext throws UnsupportedFileSystemException, an
     * IOException) must also fall through — the crash window is better
-    * than setRef/expireSnapshots hard-failing on such stores. */
+    * than setRef/expireSnapshots hard-failing on such stores.
+    *
+    * The FileContext binding may be a raw (checksum-free) filesystem
+    * under a checksummed `FileSystem` (`GraftLocalFileSystem.sessionConfs`
+    * pairs them that way): its rename leaves `dst`'s `.crc` sibling
+    * describing the OLD bytes, and every later checksummed read of `dst`
+    * fails. So a stale `dst` checksum is dropped first and a `tmp`
+    * checksum the rename left behind afterwards; `dst` then reads
+    * unverified, like every write-once log entry. */
   private def replaceAtomic(tmp: Path, dst: Path): Unit = {
+    val f = fs
+    def dropCrc(p: Path): Unit = f match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem =>
+        c.getRawFileSystem.delete(c.getChecksumFile(p), false)
+      case _ =>
+    }
+    dropCrc(dst)
     try {
       val fc = org.apache.hadoop.fs.FileContext.getFileContext(
         dst.toUri, spark.sparkContext.hadoopConfiguration)
@@ -230,8 +245,9 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     } catch {
       case _: UnsupportedOperationException
            | _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        val f = fs; f.delete(dst, false); f.rename(tmp, dst)
+        f.delete(dst, false); f.rename(tmp, dst)
     }
+    dropCrc(tmp)
   }
 
   /** Max total delete-key rows that may be broadcast when applying
@@ -558,7 +574,7 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
           val intPhys = snap.statsKeys
             .filter(k => GraftTable.integralType(snap.schema(k).dataType))
             .map(snap.physicalOf).distinct
-          val back = spark.read.parquet(s"$dir/$sub")
+          val back = spark.read.parquet(readPaths(Seq(sub)): _*)
             .select((partCols ++ physKeys).distinct.map(col): _*)
           val aggs = (count(lit(1)).as("__r") +: physKeys.flatMap { p =>
             Seq(min(col(p)).as(s"__mn_$p"), max(col(p)).as(s"__mx_$p"),
@@ -1235,6 +1251,10 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     * equality deletes applied as a single version-guarded left_anti. */
   def toDF: DataFrame = dfAt(snapshot)
 
+  /** Table-relative paths as literal (glob-escaped) read paths. */
+  private def readPaths(rels: Seq[String]): Seq[String] =
+    rels.map(r => globEscape(s"$dir/$r"))
+
   /** Commit version of each row derived from its file path as a
     * short-circuiting when-chain (dir subpaths are UUIDs — unambiguous).
     * Shared by every multi-commit read so the plan holds ONE parquet
@@ -1275,12 +1295,26 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     def readDirs(dirs: Seq[DataDir]): DataFrame =
       spark.read.schema(physSchema)
         .option("recursiveFileLookup", "true")
-        .parquet(dirs.map(d => s"$dir/${d.path}"): _*)
+        .parquet(readPaths(dirs.map(_.path)): _*)
+    // schema evolution: a dir committed before a column's add-version
+    // reads NULL for it even when its files physically carry a column of
+    // that name (add_files of a wider foreign dir). Gated on the commit
+    // version derived from the path, and only for columns some live dir
+    // predates — every other read keeps its plain projection.
+    val sinceGated = s.fields.filter(fi => s.dataDirs.exists(_.version < fi.since))
+      .map(_.logical).toSet
+    def withVersion(df: DataFrame): DataFrame =
+      df.withColumn("__cv", pathVersionCol(s.dataDirs.map(d => (d.path, d.version))))
     val selectLogical: DataFrame => DataFrame = df =>
-      df.select(s.schema.fields.map(f => col(s.physicalOf(f.name)).as(f.name)): _*)
+      df.select(s.schema.fields.map { f =>
+        val c = col(s.physicalOf(f.name))
+        (if (sinceGated(f.name)) when(col("__cv") >= s.fieldOf(f.name).since, c) else c)
+          .as(f.name)
+      }: _*)
 
     if (s.deletes.isEmpty) {
-      selectLogical(readDirs(s.dataDirs))
+      val data = readDirs(s.dataDirs)
+      selectLogical(if (sinceGated.isEmpty) data else withVersion(data))
     } else {
       // ONE relation over all data dirs with the commit version derived
       // from each row's file path (dir subpaths are UUIDs — unambiguous),
@@ -1293,12 +1327,11 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
       // contains — trivial beside the per-relation listing + plan cost
       // it replaces, at any table size (the chain length is bounded by
       // the stream fold's maxPendingDeletes).
-      val dataByVersion = readDirs(s.dataDirs)
-        .withColumn("__cv", pathVersionCol(s.dataDirs.map(d => (d.path, d.version))))
+      val dataByVersion = withVersion(readDirs(s.dataDirs))
       val delPhysKeys = s.deletes.head.keys.map(s.physicalOf)
       val delSchema = StructType(delPhysKeys.map(k => physSchema(k)))
       val delDf = spark.read.schema(delSchema)
-        .parquet(s.deletes.map(d => s"$dir/${d.path}"): _*)
+        .parquet(readPaths(s.deletes.map(_.path)): _*)
         .withColumn("__dv", pathVersionCol(s.deletes.map(d => (d.path, d.version))))
       // Broadcast delete keys ONLY when their total row count (tracked in
       // the log at write time) is known and small. A CDC-heavy table can
@@ -1312,7 +1345,7 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
       val counts = s.deletes.map(_.rowCount)
       val broadcastable = counts.forall(_ >= 0) && counts.sum <= deleteBroadcastMaxRows
       val delSide = if (broadcastable) broadcast(delDf) else delDf
-      selectLogical(dataByVersion.join(delSide, cond, "left_anti").drop("__cv"))
+      selectLogical(dataByVersion.join(delSide, cond, "left_anti"))
     }
   }
 
@@ -1397,7 +1430,7 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     val derivedCols = derivedFields.map(df => col(df.name))
     spark.read.schema(physSchema)
       .option("recursiveFileLookup", "true")
-      .parquet(paths: _*)
+      .parquet(paths.map(globEscape): _*)
       .select(logicalCols ++ derivedCols: _*)
       .filter(pred && derived.get)
       .select(s.schema.fields.map(f => col(f.name)): _*)
@@ -1412,7 +1445,7 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
       StructField(s.physicalOf(f.name), f.dataType, nullable = true)))
     spark.read.schema(physSchema)
       .option("recursiveFileLookup", "true")
-      .parquet(dirs.map(d => s"$dir/${d.path}"): _*)
+      .parquet(readPaths(dirs.map(_.path)): _*)
       .select(s.schema.fields.map(f => col(s.physicalOf(f.name)).as(f.name)): _*)
   }
 
@@ -1925,7 +1958,7 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
         StructField(s.physicalOf(f.name), f.dataType, nullable = true)))
       spark.read.schema(physSchema)
         .option("recursiveFileLookup", "true")
-        .parquet(newDirs.map(d => s"$dir/${d.path}"): _*)
+        .parquet(readPaths(newDirs.map(_.path)): _*)
         .select(s.schema.fields.map(f => col(s.physicalOf(f.name)).as(f.name)): _*)
     }
   }
@@ -1968,7 +2001,7 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     require(files.forall(_.endsWith(".parquet")),
       s"add_files accepts .parquet files only; found: " +
         files.filterNot(_.endsWith(".parquet")).take(3).mkString(", "))
-    val fileSchema = spark.read.parquet(sourceDir).schema
+    val fileSchema = spark.read.parquet(globEscape(sourceDir)).schema
     s.schema.fields.foreach { fld =>
       val phys = s.physicalOf(fld.name)
       val in = fileSchema.fields.find(_.name == phys)
@@ -1977,7 +2010,7 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
           s"'$phys'): table ${fld.dataType.sql}, files " +
           s"${in.map(_.dataType.sql).getOrElse("<missing>")}")
     }
-    val rows = spark.read.parquet(sourceDir).count()
+    val rows = spark.read.parquet(globEscape(sourceDir)).count()
     val sub = s"data/${java.util.UUID.randomUUID()}"
     val dest = new Path(dir, sub)
     dest.getParent.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(dest.getParent)
@@ -2033,7 +2066,7 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
       if (insDirs.isEmpty) Nil
       else Seq(logical(
           spark.read.schema(physSchema).option("recursiveFileLookup", "true")
-            .parquet(insDirs.map(d => s"$dir/${d.path}"): _*))
+            .parquet(readPaths(insDirs.map(_.path)): _*))
         .withColumn("_change_type", lit("insert"))
         .withColumn("_commit_version",
           pathVersionCol(insDirs.map(d => (d.path, d.version)))))
@@ -2067,7 +2100,7 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
               .option("keepScan", "true").load(dir)
               .select((aligned.toIndexedSeq ++ d.keys.map(col)): _*)
           else dfAt(parent).select(aligned.toIndexedSeq: _*)
-        val keyDf = spark.read.parquet(s"$dir/${d.path}")
+        val keyDf = spark.read.parquet(readPaths(Seq(d.path)): _*)
           .select(d.keys.map(k =>
             col(if (positional) k else s.physicalOf(k)).as(k)): _*)
         val keySide =
@@ -2111,10 +2144,9 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     }
 
   /** The current snapshot rendered as self-contained Spark SQL over
-    * `parquet.`path`` relations — what [[graft.catalog.GraftCatalog]]
-    * serves as a DSv2 view so `SELECT * FROM graft.ns.table` resolves
-    * through a real catalog with full pushdown into the parquet scans.
-    * Evolution-aware: dirs committed before a column's add-version
+    * `parquet.`path`` relations — what [[graft.catalog.GraftCatalog]]'s
+    * `loadView` serves through the `ViewCatalog` API (catalog SQL reads
+    * plan from [[dfAt]] instead). Evolution-aware: dirs committed before a column's add-version
     * project typed NULLs; equality deletes become a version-guarded
     * NOT EXISTS; physical names alias back to logical ones. */
   def viewSql: String = viewSqlOf(snapshot)
@@ -2128,12 +2160,7 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
       "pending position deletes cannot be rendered as view SQL; " +
         "read through the graft DSv2 scan or compact() first")
     def q(n: String) = s"`${n.replace("`", "``")}`"
-    // Spark glob-expands every file-source path (including the single-path
-    // form), so glob metacharacters in the table root or a subpath must be
-    // backslash-escaped to read literally — without this a root named
-    // `t{1}` silently matches nothing. `,` is special only inside braces,
-    // where the multi-dir form below places the subpaths.
-    def ge(p: String) = p.replaceAll("([\\\\\\[\\]{}*?,])", "\\\\$1")
+    def ge(p: String) = globEscape(p)
     def qp(p: String) = "`" + p.replace("`", "``") + "`"
     // SQL single-quoted string literal (escapedStringLiterals=false)
     def qstr(v: String) = "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
@@ -2682,8 +2709,10 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     val f = fs
     (0 until cutoff).filterNot(pinned.contains).foreach { v =>
       val p = new Path(logDir, f"v$v%05d.json")
-      if (f.exists(p)) {
-        val s = snapshotAt(v)
+      // an already-expired entry has no dirs left: re-marking it is
+      // pure log I/O that would grow with every call
+      val entry = if (f.exists(p)) Some(snapshotAt(v)) else None
+      entry.filter(_.op != "expired").foreach { s =>
         val toDelete = (s.dataDirs.map(_.path) ++ s.deletes.map(_.path))
           .filterNot(live.contains)
         // MARKER FIRST, data delete second (write tmp + rename — readers
@@ -2991,7 +3020,7 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
         val needStats = physKeys.nonEmpty && !f.exists(statsP)
         val needPcol = physKeys.nonEmpty && spec.nonEmpty && !f.exists(pcolP)
         if (needStats || needPcol) {
-          val back = spark.read.parquet(root.toString)
+          val back = spark.read.parquet(globEscape(root.toString))
           // columns physically present in THIS dir's files: a dir from
           // before a column existed simply records no entry for it (the
           // fold readers skip such dirs by FieldInfo.since)
@@ -3437,6 +3466,13 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
 object GraftTable {
   private val mapper = new ObjectMapper()
 
+  /** Backslash-escapes Hadoop glob metacharacters. Spark glob-expands
+    * every file-source path, so a table root like `t{1}` read unescaped
+    * silently matches nothing (or a sibling). `,` is special only inside
+    * braces, where [[GraftTable.viewSqlOf]]'s multi-dir form places it. */
+  private def globEscape(p: String): String =
+    p.replaceAll("([\\\\\\[\\]{}*?,])", "\\\\$1")
+
   /** A copy-on-write replace lost its OCC race against a row-changing
     * concurrent commit: the replacement was computed from a stale
     * snapshot and committing it would drop the concurrent commit's rows.
@@ -3561,9 +3597,10 @@ object GraftTable {
     val snap = Snapshot(0, formatVersion, "create", schema,
       schema.fieldNames.toSeq.map(n => FieldInfo(n, n, 0)), spec, key, Seq.empty, Seq.empty,
       Seq.empty, bloomKeys, statsKeys, commitTimeMs = System.currentTimeMillis())
-    val p = new Path(logDir, "v00000.json")
-    val os = fs.create(p, false)
-    try os.write(writeSnapshot(snap).getBytes("UTF-8")) finally os.close()
+    // through the same write-once claim as every later entry (no
+    // checksum sibling that a raw-FileContext expiry rename would stale)
+    require(t.writeOnce(new Path(logDir, "v00000.json"), writeSnapshot(snap).getBytes("UTF-8")),
+      s"table already exists at $dir")
     t
   }
 
