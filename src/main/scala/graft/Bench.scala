@@ -77,9 +77,10 @@ object Bench {
   }
 
   /** Quiets ONE known-benign Spark warning: `FileStreamSink.hasMetadata`
-    * probes every file-source path with a literal `getFileStatus` before
-    * glob expansion, so the r15 grouped view SQL's `{u1,u2}` brace-glob
-    * relations log a WARN + full FileNotFoundException stack per analysis
+    * probes a single-path file-source relation with a literal
+    * `getFileStatus` before glob expansion, so a glob-escaped read path
+    * (a table root holding `{`, `[`, … — see `GraftTable.globEscape`)
+    * logs a WARN + full FileNotFoundException stack per analysis
     * ("Assume no metadata directory…") — caught and handled by Spark
     * itself, pure log noise that would bury real warnings in bench logs.
     * Scoped to that single logger; harness/test sessions only. */

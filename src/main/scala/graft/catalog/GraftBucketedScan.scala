@@ -29,7 +29,7 @@ import graft.table.GraftTable
   *  - rows are read by Spark's own parquet reader function
   *    ([[GraftShim.parquetFileReader]]): footer filter pushdown, column
   *    pruning, and missing-physical-column-as-null schema evolution all
-  *    behave exactly like the view-based read path.
+  *    behave exactly like [[GraftTable.dfAt]]'s read.
   *
   * Eligibility (checked by the caller): single bucket partition field, no
   * equality deletes, at least one data dir.
@@ -201,8 +201,8 @@ final case class GraftFilePartition(files: Array[(String, Long)],
   *
   * Pending equality deletes are applied READER-SIDE: the driver folds
   * the delete files into a (key → newest delete version) map — gated by
-  * `graft.delete.broadcastMaxRows`, the same bound the view path uses
-  * for its broadcast anti-join — and each reader drops rows whose key
+  * `graft.delete.broadcastMaxRows`, the same bound [[GraftTable.dfAt]]
+  * uses for its broadcast anti-join — and each reader drops rows whose key
   * has a delete strictly newer than the row's dir version. This is what
   * lets MoR DML chain: UPDATE → UPDATE works without a compact between
   * statements.
@@ -512,36 +512,25 @@ object GraftBucketedScan {
       delFiles: Seq[graft.table.DeleteFile], physKeys: Seq[String],
       keyTypes: Array[DataType], maxRows: Long): () => Map[Seq[Any], Int] = {
     val spark = SparkSession.active
-    import org.apache.spark.sql.functions.{col, lit, max => fmax}
+    import org.apache.spark.sql.functions.{col, max => fmax}
+    import graft.table.GraftTable.{globEscape, pathVersionCol}
     // legacy delete files (rowCount -1) fall back to a footer-metadata
     // count — unknown size is a fallback, never an error
     val counts = delFiles.map(d =>
       if (d.rowCount >= 0) d.rowCount
-      else spark.read.parquet(s"$tableDir/${d.path}").count())
+      else spark.read.parquet(globEscape(s"$tableDir/${d.path}")).count())
     // ONE relation over every delete file with the commit version derived
     // from the row's file path (delete subpaths are UUIDs — unambiguous):
     // the plan stays O(1) in pending-delete count instead of one parquet
     // relation per file (same single-relation shape as GraftTable.dfAt)
     val delSchema = StructType(physKeys.indices.map(i =>
       StructField(physKeys(i), keyTypes(i), nullable = true)))
-    val versionCol = delFiles.tail.foldLeft(
-      org.apache.spark.sql.functions.when(
-        org.apache.spark.sql.functions.input_file_name()
-          .contains(s"/${delFiles.head.path}/"), lit(delFiles.head.version))) {
-      (w, d) => w.when(org.apache.spark.sql.functions.input_file_name()
-        .contains(s"/${d.path}/"), lit(d.version))
-    }
-      // unmatched path = NULL __v = NPE at the r.getInt below (or a
-      // silently wrong max on the scratch path) — unreachable today, but
-      // fail with the cause named rather than an NPE (VERDICT r14 item 3)
-      .otherwise(org.apache.spark.sql.functions.raise_error(
-        org.apache.spark.sql.functions.concat(
-          lit("graft: cannot derive delete version — input_file_name() '"),
-          org.apache.spark.sql.functions.input_file_name(),
-          lit("' matches no logged delete file"))))
+    // the shared when-chain fails loudly on an unmatched path: a NULL __v
+    // would NPE at the r.getInt below (or silently skew the max on the
+    // scratch path)
     val merged = spark.read.schema(delSchema)
-      .parquet(delFiles.map(d => s"$tableDir/${d.path}"): _*)
-      .withColumn("__v", versionCol)
+      .parquet(delFiles.map(d => globEscape(s"$tableDir/${d.path}")): _*)
+      .withColumn("__v", pathVersionCol(delFiles.map(d => (d.path, d.version))))
       .groupBy(physKeys.map(col): _*).agg(fmax(col("__v")).as("__v"))
     if (counts.sum <= maxRows) {
       val conv = keyTypes.map(

@@ -2,7 +2,7 @@ package graft.catalog
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, NoSuchViewException, TableAlreadyExistsException}
+import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.{StructField, StructType}
@@ -27,8 +27,6 @@ import java.util
   * filter/column pushdown into vectorized parquet scans; other sessions
   * fall back to the table's V1Scan. Snapshot isolation comes free: each
   * query plans against the snapshot current at resolution time.
-  * [[loadView]] still serves the snapshot as view SQL text
-  * ([[GraftTable.viewSql]]) for callers of the `ViewCatalog` API.
   *
   * Configuration:
   * {{{
@@ -37,7 +35,7 @@ import java.util
   * }}}
   * with tables at `<warehouse>/<namespace>/<table>`.
   */
-class GraftCatalog extends TableCatalog with ViewCatalog with SupportsNamespaces
+class GraftCatalog extends TableCatalog with SupportsNamespaces
     with FunctionCatalog
     with org.apache.spark.sql.connector.catalog.ProcedureCatalog {
 
@@ -59,52 +57,7 @@ class GraftCatalog extends TableCatalog with ViewCatalog with SupportsNamespaces
   override def tableExists(ident: Identifier): Boolean =
     GraftTable.exists(spark, dirOf(ident))
 
-  // ---- ViewCatalog (the read path) ------------------------------------
-
-  override def loadView(ident: Identifier): View = {
-    if (!tableExists(ident)) throw new NoSuchViewException(ident)
-    val t = GraftTable.load(spark, dirOf(ident))
-    // pending position deletes are inexpressible as view SQL — report
-    // "no view" so resolution falls through to loadTable's DSv2 scan
-    if (t.snapshot.deletes.exists(_.keys == GraftTable.PosDeleteKeys))
-      throw new NoSuchViewException(ident)
-    val viewSchema = t.schema
-    val sql = t.viewSql
-    new View {
-      override def name(): String = (catalogName +: ident.namespace() :+ ident.name()).mkString(".")
-      override def query(): String = sql
-      // parquet.`path` relations resolve through the session catalog
-      override def currentCatalog(): String = "spark_catalog"
-      override def currentNamespace(): Array[String] = Array.empty
-      override def schema(): StructType = viewSchema
-      override def queryColumnNames(): Array[String] = viewSchema.fieldNames
-      override def columnAliases(): Array[String] = Array.empty
-      override def columnComments(): Array[String] = Array.empty
-      override def properties(): util.Map[String, String] = util.Collections.emptyMap()
-    }
-  }
-
-  override def viewExists(ident: Identifier): Boolean = tableExists(ident)
-
-  override def listViews(namespace: String*): Array[Identifier] = {
-    val ns = new Path((warehouse +: namespace).mkString("/"))
-    val fs = ns.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(ns)) throw new NoSuchNamespaceException(namespace.toArray)
-    fs.listStatus(ns).filter(_.isDirectory).map(_.getPath.getName)
-      .filter(n => GraftTable.exists(spark, (warehouse +: namespace :+ n).mkString("/")))
-      .map(n => Identifier.of(namespace.toArray, n))
-  }
-
-  override def createView(info: ViewInfo): View =
-    throw new UnsupportedOperationException("graft views are backed by tables; use GraftTable.create")
-  override def alterView(ident: Identifier, changes: ViewChange*): View =
-    throw new UnsupportedOperationException("read-only catalog")
-  override def dropView(ident: Identifier): Boolean =
-    throw new UnsupportedOperationException("read-only catalog")
-  override def renameView(oldIdent: Identifier, newIdent: Identifier): Unit =
-    throw new UnsupportedOperationException("read-only catalog")
-
-  // ---- TableCatalog (the write path + programmatic DDL) ---------------
+  // ---- TableCatalog (reads, writes + programmatic DDL) ----------------
 
   override def loadTable(ident: Identifier): Table = {
     if (!tableExists(ident)) {
@@ -146,8 +99,14 @@ class GraftCatalog extends TableCatalog with ViewCatalog with SupportsNamespaces
       Some(t.versionAsOfTimestamp(timestamp / 1000L)))
   }
 
-  override def listTables(namespace: Array[String]): Array[Identifier] =
-    listViews(namespace.toIndexedSeq: _*)
+  override def listTables(namespace: Array[String]): Array[Identifier] = {
+    val ns = new Path((warehouse +: namespace).mkString("/"))
+    val fs = ns.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(ns)) throw new NoSuchNamespaceException(namespace)
+    fs.listStatus(ns).filter(_.isDirectory).map(_.getPath.getName)
+      .filter(n => GraftTable.exists(spark, (warehouse +: namespace :+ n).mkString("/")))
+      .map(n => Identifier.of(namespace, n))
+  }
 
   /** Column[]-based variant so DDL column comments survive into the log
     * (they ride StructField metadata through StructType.json). */

@@ -233,10 +233,11 @@ final class GraftChangelogMicroBatchStream(table: GraftTable, pinned: Snapshot,
       parent.dataDirs.flatMap(dd => GraftBucketedScan.filePartitions(table.dir, dd))
     val maxRows = spark.conf.getOption("graft.delete.broadcastMaxRows")
       .map(_.toLong).getOrElse(1000000L)
+    val deletePath = GraftTable.globEscape(s"${table.dir}/${d.path}")
     try {
       if (d.keys == GraftTable.PosDeleteKeys) {
         if (d.rowCount < 0 || d.rowCount > maxRows) return all
-        val victims: Set[String] = spark.read.parquet(s"${table.dir}/${d.path}")
+        val victims: Set[String] = spark.read.parquet(deletePath)
           .select(col(GraftMetaCols.FILE)).distinct()
           .collect().map(_.getString(0)).toSet
         if (victims.contains(null)) return all
@@ -253,12 +254,12 @@ final class GraftChangelogMicroBatchStream(table: GraftTable, pinned: Snapshot,
         val phys = pinned.physicalOf(d.keys.head)
         val pred =
           if (d.rowCount >= 0 && d.rowCount <= 1000) {
-            val values = spark.read.parquet(s"${table.dir}/${d.path}")
+            val values = spark.read.parquet(deletePath)
               .select(col(phys)).distinct().collect().map(_.get(0))
             if (values.isEmpty || values.contains(null)) return all
             col(parentKeyName).isin(values.toIndexedSeq: _*)
           } else {
-            val r = spark.read.parquet(s"${table.dir}/${d.path}")
+            val r = spark.read.parquet(deletePath)
               .agg(fmin(col(phys)), fmax(col(phys))).collect().head
             if (r.isNullAt(0) || r.isNullAt(1)) return all
             col(parentKeyName) >= lit(r.get(0)) && col(parentKeyName) <= lit(r.get(1))

@@ -355,7 +355,8 @@ private[catalog] object GraftStagedFiles {
   /** Read a staged raw-parquet dir back under LOGICAL column names. */
   def readLogical(spark: SparkSession, tableDir: String, sub: String,
                   snap: graft.table.Snapshot, querySchema: StructType): DataFrame =
-    spark.read.schema(physSchemaOf(snap, querySchema)).parquet(s"$tableDir/$sub")
+    spark.read.schema(physSchemaOf(snap, querySchema))
+      .parquet(graft.table.GraftTable.globEscape(s"$tableDir/$sub"))
       .select(querySchema.fields.map(f =>
         col(s"`${snap.physicalOf(f.name)}`").as(f.name)).toIndexedSeq: _*)
 

@@ -32,11 +32,12 @@ import scala.jdk.CollectionConverters._
   *
   * Reads: sessions built with [[GraftSparkSessionExtensions]] never scan
   * through this class — the resolution rule swaps read-position
-  * relations for the snapshot's `parquet.`path`` view plan (full
-  * vectorized-scan pushdown). The [[V1Scan]] fallback here keeps catalog
-  * reads *correct* on sessions without the extensions (column pruning
-  * pushed, filters forwarded to [[GraftTable.scan]] for transform/footer
-  * skipping, then re-applied by Spark).
+  * relations for the analyzed plan of the snapshot's
+  * [[GraftTable.dfAt]] (full vectorized-scan pushdown). The [[V1Scan]]
+  * fallback here keeps catalog reads *correct* on sessions without the
+  * extensions (column pruning pushed, filters forwarded to
+  * [[GraftTable.scan]] for transform/footer skipping, then re-applied by
+  * Spark).
   */
 final class GraftSparkTable(val dir: String, tableName: String,
                             val asOfVersion: Option[Int] = None,

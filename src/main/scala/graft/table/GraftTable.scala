@@ -926,7 +926,7 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     // (partitionBy of nothing) — such dirs must not enter the snapshot
     val keptSub =
       if (touched.isEmpty) None
-      else Some(writeData(readLogical(s, touched).filter(!rowPred), s))
+      else Some(writeData(readDirs(s, touched).filter(!rowPred), s))
         .filter(_._2 != 0)
     val (newSub, newRows) = writeData(aligned, s)
     commit(s.version + 1)((rebase, v) => {
@@ -1255,98 +1255,77 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
   private def readPaths(rels: Seq[String]): Seq[String] =
     rels.map(r => globEscape(s"$dir/$r"))
 
-  /** Commit version of each row derived from its file path as a
-    * short-circuiting when-chain (dir subpaths are UUIDs — unambiguous).
-    * Shared by every multi-commit read so the plan holds ONE parquet
-    * relation instead of one per dir/delete file (r14: plan size — and
-    * with it per-task deserialize time — grew linearly with commit
-    * count; chain length is bounded by the stream fold's
-    * maxPendingDeletes / compaction cadence). */
-  private def pathVersionCol(entries: Seq[(String, Int)]): Column =
-    entries.tail.foldLeft(
-      when(input_file_name().contains(s"/${entries.head._1}/"),
-        lit(entries.head._2))) { case (w, (p, v)) =>
-      w.when(input_file_name().contains(s"/$p/"), lit(v))
-    }
-      // Unreachable today (the column is built directly on the parquet
-      // read, and dir subpaths are UUIDs), but a refactor that interposes
-      // a cache/checkpoint — where input_file_name() is empty — would
-      // otherwise yield NULL here, null out the delete anti-join
-      // condition, and silently resurrect deleted rows. Fail loudly
-      // instead (VERDICT r14 item 3 / ADVICE).
-      .otherwise(raise_error(concat(
-        lit("graft: cannot derive commit version — input_file_name() '"),
-        input_file_name(),
-        lit("' matches no logged dir (was the read re-materialized " +
-          "through a cache/checkpoint?)"))))
+  /** The one data-dir-to-logical-rows builder: every read of `s`'s data
+    * dirs goes through here (snapshot reads, scans, incremental and
+    * changelog reads, rewrites). Reads `dirs` — or, for a pruned scan,
+    * their `leaves` (absolute k=v leaf dirs under them) — as ONE
+    * relation with an explicit physical read schema plus the `extra`
+    * in-file fields (no schema-inference job, no partition discovery),
+    * and aliases physical names to logical ones. Schema evolution: a dir
+    * committed before a column's add-version reads NULL for it even when
+    * its files physically carry a column of that name (add_files of a
+    * wider foreign dir), gated on the commit version derived from the
+    * path. The version column `__cv` exists only when that gate needs it
+    * or `withVersion` asks for it (delete guard, changelog stamp); output
+    * is the logical columns, then `extra`, then `__cv` if asked. */
+  private def readDirs(s: Snapshot, dirs: Seq[DataDir], withVersion: Boolean = false,
+                       extra: Seq[StructField] = Nil, leaves: Seq[String] = Nil): DataFrame = {
+    val physSchema = StructType(s.schema.fields.map(f =>
+      StructField(s.physicalOf(f.name), f.dataType, nullable = true)) ++ extra)
+    val raw = spark.read.schema(physSchema)
+      .option("recursiveFileLookup", "true")
+      .parquet((if (leaves.isEmpty) readPaths(dirs.map(_.path)) else leaves.map(globEscape)): _*)
+    val sinceGated = s.fields.filter(fi => dirs.exists(_.version < fi.since))
+      .map(_.logical).toSet
+    val data =
+      if (sinceGated.isEmpty && !withVersion) raw
+      else raw.withColumn("__cv", pathVersionCol(dirs.map(d => (d.path, d.version))))
+    data.select(s.schema.fields.map { f =>
+      val c = col(s.physicalOf(f.name))
+      (if (sinceGated(f.name)) when(col("__cv") >= s.fieldOf(f.name).since, c) else c)
+        .as(f.name)
+    } ++ extra.map(x => col(x.name)) ++ (if (withVersion) Seq(col("__cv")) else Nil): _*)
+  }
 
   def dfAt(s: Snapshot): DataFrame = {
-    if (s.dataDirs.isEmpty) return spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.schema)
+    if (s.dataDirs.isEmpty) return emptyDF(s)
     // pending POSITION deletes need each row's (_file, _pos) identity —
     // only the DSv2 reader stamps it, so route through the graft source
     // (its delete-aware scan applies every pending delete group)
     if (s.deletes.exists(_.keys == GraftTable.PosDeleteKeys))
       return spark.read.format("graft")
         .option("versionAsOf", s.version).load(dir)
-    // physical read schema: physical names + typed partition-derived cols
-    val physSchema = StructType(s.schema.fields.map(f =>
-      StructField(s.physicalOf(f.name), f.dataType, nullable = true)))
-    def readDirs(dirs: Seq[DataDir]): DataFrame =
-      spark.read.schema(physSchema)
-        .option("recursiveFileLookup", "true")
-        .parquet(readPaths(dirs.map(_.path)): _*)
-    // schema evolution: a dir committed before a column's add-version
-    // reads NULL for it even when its files physically carry a column of
-    // that name (add_files of a wider foreign dir). Gated on the commit
-    // version derived from the path, and only for columns some live dir
-    // predates — every other read keeps its plain projection.
-    val sinceGated = s.fields.filter(fi => s.dataDirs.exists(_.version < fi.since))
-      .map(_.logical).toSet
-    def withVersion(df: DataFrame): DataFrame =
-      df.withColumn("__cv", pathVersionCol(s.dataDirs.map(d => (d.path, d.version))))
-    val selectLogical: DataFrame => DataFrame = df =>
-      df.select(s.schema.fields.map { f =>
-        val c = col(s.physicalOf(f.name))
-        (if (sinceGated(f.name)) when(col("__cv") >= s.fieldOf(f.name).since, c) else c)
-          .as(f.name)
-      }: _*)
-
-    if (s.deletes.isEmpty) {
-      val data = readDirs(s.dataDirs)
-      selectLogical(if (sinceGated.isEmpty) data else withVersion(data))
-    } else {
-      // ONE relation over all data dirs with the commit version derived
-      // from each row's file path (dir subpaths are UUIDs — unambiguous),
-      // and ONE over all delete files likewise. The previous shape — one
-      // parquet relation per dir/delete unioned together — made the plan
-      // (and every task's serialized binary) grow linearly with commit
-      // count: a 10-commit MoR read cost ~1.0s vs ~0.25s compacted, with
-      // per-task deserialize time the dominant term (r14 profile). A
-      // short-circuiting when-chain per row is O(pending dirs) string
-      // contains — trivial beside the per-relation listing + plan cost
-      // it replaces, at any table size (the chain length is bounded by
-      // the stream fold's maxPendingDeletes).
-      val dataByVersion = withVersion(readDirs(s.dataDirs))
-      val delPhysKeys = s.deletes.head.keys.map(s.physicalOf)
-      val delSchema = StructType(delPhysKeys.map(k => physSchema(k)))
-      val delDf = spark.read.schema(delSchema)
-        .parquet(readPaths(s.deletes.map(_.path)): _*)
-        .withColumn("__dv", pathVersionCol(s.deletes.map(d => (d.path, d.version))))
-      // Broadcast delete keys ONLY when their total row count (tracked in
-      // the log at write time) is known and small. A CDC-heavy table can
-      // accumulate delete keys far past broadcast size — forcing the hint
-      // there means executor OOM with no graceful degradation; above the
-      // threshold (or when any count is unknown) Spark's planner picks a
-      // shuffle anti-join instead.
-      val keys = s.deletes.head.keys.map(s.physicalOf)
-      val cond = keys.map(k => dataByVersion(k) <=> delDf(k)).reduce(_ && _) &&
-        dataByVersion("__cv") < delDf("__dv")
-      val counts = s.deletes.map(_.rowCount)
-      val broadcastable = counts.forall(_ >= 0) && counts.sum <= deleteBroadcastMaxRows
-      val delSide = if (broadcastable) broadcast(delDf) else delDf
-      selectLogical(dataByVersion.join(delSide, cond, "left_anti"))
-    }
+    if (s.deletes.isEmpty) return readDirs(s, s.dataDirs)
+    // ONE relation over all data dirs with the commit version derived
+    // from each row's file path (dir subpaths are UUIDs — unambiguous),
+    // and ONE over all delete files likewise. The previous shape — one
+    // parquet relation per dir/delete unioned together — made the plan
+    // (and every task's serialized binary) grow linearly with commit
+    // count: a 10-commit MoR read cost ~1.0s vs ~0.25s compacted, with
+    // per-task deserialize time the dominant term (r14 profile). A
+    // short-circuiting when-chain per row is O(pending dirs) string
+    // contains — trivial beside the per-relation listing + plan cost
+    // it replaces, at any table size (the chain length is bounded by
+    // the stream fold's maxPendingDeletes).
+    val dataByVersion = readDirs(s, s.dataDirs, withVersion = true)
+    val keys = s.deletes.head.keys
+    val delSchema = StructType(keys.map(k =>
+      StructField(s.physicalOf(k), s.schema(k).dataType, nullable = true)))
+    val delDf = spark.read.schema(delSchema)
+      .parquet(readPaths(s.deletes.map(_.path)): _*)
+      .withColumn("__dv", pathVersionCol(s.deletes.map(d => (d.path, d.version))))
+    // Broadcast delete keys ONLY when their total row count (tracked in
+    // the log at write time) is known and small. A CDC-heavy table can
+    // accumulate delete keys far past broadcast size — forcing the hint
+    // there means executor OOM with no graceful degradation; above the
+    // threshold (or when any count is unknown) Spark's planner picks a
+    // shuffle anti-join instead.
+    val cond = keys.map(k => dataByVersion(k) <=> delDf(s.physicalOf(k))).reduce(_ && _) &&
+      dataByVersion("__cv") < delDf("__dv")
+    val counts = s.deletes.map(_.rowCount)
+    val broadcastable = counts.forall(_ >= 0) && counts.sum <= deleteBroadcastMaxRows
+    val delSide = if (broadcastable) broadcast(delDf) else delDf
+    dataByVersion.join(delSide, cond, "left_anti").drop("__cv")
   }
 
   /** Filtered scan with Iceberg-style transform pruning, two levels deep:
@@ -1410,44 +1389,27 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
                         live: Seq[DataDir], pred: Column): DataFrame = {
     val derived = TransformPruning.derive(spec, s.schema, pred, includeIdentity = true, sessionZone)
     if (spec.isEmpty || derived.isEmpty)
-      return readLogical(s, live).filter(pred)
+      return readDirs(s, live).filter(pred)
     // read schema includes the derived partition columns (they are stored
     // in-file precisely so this filter can reach the footer stats)
     val derivedFields = spec.filterNot(_.transform == "identity").map { pf =>
       StructField(pf.name, dirColType(pf, s.schema), nullable = true)
     }
-    val physSchema = StructType(s.schema.fields.map(f =>
-      StructField(s.physicalOf(f.name), f.dataType, nullable = true)) ++ derivedFields)
     val roots = live.map(d => s"$dir/${d.path}")
     val paths = prunedLeafDirs(roots, spec, s.schema, derived.get).getOrElse(roots)
     if (paths.isEmpty) return emptyDF(s)
-    // alias physical -> logical names BEFORE applying the user predicate
-    // (a predicate on a renamed column must bind to the renamed data, not
-    // to whatever file column happens to carry its old name); the derived
-    // partition columns ride along so the combined filter still reaches
-    // the parquet footers (Catalyst pushes filters through aliases)
-    val logicalCols = s.schema.fields.map(f => col(s.physicalOf(f.name)).as(f.name))
-    val derivedCols = derivedFields.map(df => col(df.name))
-    spark.read.schema(physSchema)
-      .option("recursiveFileLookup", "true")
-      .parquet(paths.map(globEscape): _*)
-      .select(logicalCols ++ derivedCols: _*)
+    // the user predicate binds to the LOGICAL names (a predicate on a
+    // renamed column must bind to the renamed data, not to whatever file
+    // column happens to carry its old name); the derived partition
+    // columns ride along so the combined filter still reaches the parquet
+    // footers (Catalyst pushes filters through aliases)
+    readDirs(s, live, extra = derivedFields, leaves = paths)
       .filter(pred && derived.get)
       .select(s.schema.fields.map(f => col(f.name)): _*)
   }
 
   private def emptyDF(s: Snapshot): DataFrame = spark.createDataFrame(
     spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.schema)
-
-  /** Multi-dir physical read aliased to the logical schema (no deletes). */
-  private def readLogical(s: Snapshot, dirs: Seq[DataDir]): DataFrame = {
-    val physSchema = StructType(s.schema.fields.map(f =>
-      StructField(s.physicalOf(f.name), f.dataType, nullable = true)))
-    spark.read.schema(physSchema)
-      .option("recursiveFileLookup", "true")
-      .parquet(readPaths(dirs.map(_.path)): _*)
-      .select(s.schema.fields.map(f => col(s.physicalOf(f.name)).as(f.name)): _*)
-  }
 
   /** Data dirs whose logged [min, max] bounds can satisfy `pred`'s
     * comparison conjuncts; a dir is dropped only when some conjunct
@@ -1951,16 +1913,7 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
           s"start from v$v instead")
     }
     val newDirs = s.dataDirs.filter(d => d.version > fromVersion && d.version <= toVersion)
-    if (newDirs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.schema)
-    else {
-      val physSchema = StructType(s.schema.fields.map(f =>
-        StructField(s.physicalOf(f.name), f.dataType, nullable = true)))
-      spark.read.schema(physSchema)
-        .option("recursiveFileLookup", "true")
-        .parquet(readPaths(newDirs.map(_.path)): _*)
-        .select(s.schema.fields.map(f => col(s.physicalOf(f.name)).as(f.name)): _*)
-    }
+    if (newDirs.isEmpty) emptyDF(s) else readDirs(s, newDirs)
   }
 
   /** In-place migration (Iceberg's `add_files` role): registers an
@@ -2049,12 +2002,7 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
   def changesBetween(fromVersion: Int, toVersion: Int): DataFrame = {
     val s = snapshotAt(toVersion)
     requireChangelogExpressible(fromVersion, toVersion)
-    val physSchema = StructType(s.schema.fields.map(f =>
-      StructField(s.physicalOf(f.name), f.dataType, nullable = true)))
-    val logical: DataFrame => DataFrame = df =>
-      df.select(s.schema.fields.map(f => col(s.physicalOf(f.name)).as(f.name)): _*)
-    val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.schema)
+    val empty = emptyDF(s)
       .withColumn("_change_type", lit("insert"))
       .withColumn("_commit_version", lit(0))
       .limit(0)
@@ -2064,12 +2012,9 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
       .filter(d => d.version > fromVersion && d.version <= toVersion)
     val inserts =
       if (insDirs.isEmpty) Nil
-      else Seq(logical(
-          spark.read.schema(physSchema).option("recursiveFileLookup", "true")
-            .parquet(readPaths(insDirs.map(_.path)): _*))
+      else Seq(readDirs(s, insDirs, withVersion = true)
         .withColumn("_change_type", lit("insert"))
-        .withColumn("_commit_version",
-          pathVersionCol(insDirs.map(d => (d.path, d.version)))))
+        .withColumnRenamed("__cv", "_commit_version"))
     val deletes = s.deletes
       .filter(d => d.version > fromVersion && d.version <= toVersion)
       .map { d =>
@@ -2107,8 +2052,8 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
           if (d.rowCount >= 0 && d.rowCount <= deleteBroadcastMaxRows)
             broadcast(keyDf)
           else keyDf
-        // NULL-SAFE key match: the reader-side delete filter and the view
-        // path's anti-join both treat NULL keys as equal (<=>, the
+        // NULL-SAFE key match: the reader-side delete filter and dfAt's
+        // anti-join both treat NULL keys as equal (<=>, the
         // Iceberg equality-delete contract), so the pre-image join must
         // too — a plain equi-join would silently drop the pre-image of a
         // NULL-keyed row the delete really kills (keyed tables assert
@@ -2142,120 +2087,6 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
         s"changelog read crosses a non-changelog-expressible '$op' commit " +
           s"at v$v; start from v$v instead")
     }
-
-  /** The current snapshot rendered as self-contained Spark SQL over
-    * `parquet.`path`` relations — what [[graft.catalog.GraftCatalog]]'s
-    * `loadView` serves through the `ViewCatalog` API (catalog SQL reads
-    * plan from [[dfAt]] instead). Evolution-aware: dirs committed before a column's add-version
-    * project typed NULLs; equality deletes become a version-guarded
-    * NOT EXISTS; physical names alias back to logical ones. */
-  def viewSql: String = viewSqlOf(snapshot)
-
-  def viewSqlOf(s: Snapshot): String = {
-    // a position delete keys on the READER-stamped (_file, _pos) row
-    // identity, which a self-contained SQL view over parquet.`path`
-    // relations cannot reproduce — consumers must use the DSv2 scan
-    // (GraftExtensions keeps the relation un-rewritten for these)
-    require(!s.deletes.exists(_.keys == GraftTable.PosDeleteKeys),
-      "pending position deletes cannot be rendered as view SQL; " +
-        "read through the graft DSv2 scan or compact() first")
-    def q(n: String) = s"`${n.replace("`", "``")}`"
-    def ge(p: String) = globEscape(p)
-    def qp(p: String) = "`" + p.replace("`", "``") + "`"
-    // SQL single-quoted string literal (escapedStringLiterals=false)
-    def qstr(v: String) = "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-    val logicalList = s.schema.fields.map(f => q(f.name)).mkString(", ")
-    if (s.dataDirs.isEmpty) {
-      val cols = s.schema.fields
-        .map(f => s"CAST(NULL AS ${f.dataType.sql}) AS ${q(f.name)}").mkString(", ")
-      return s"SELECT $cols WHERE false"
-    }
-    // ONE parquet relation per GROUP of dirs — `{u1,u2,…}` brace glob over
-    // the shared parent plus a CASE on input_file_name() deriving `__cv` —
-    // instead of one relation per dir (r15: the dfAt single-relation
-    // rewrite applied to the SQL path; sql_mor_dml's plan held 18 scans
-    // and grew with commit count). Dirs group only when the relation is
-    // PROVABLY homogeneous: same NULL-projection set (schema evolution —
-    // every file in the group physically carries every selected column,
-    // so schema inference cannot miss one), same governing partition spec
-    // (partition discovery over mixed layouts conflicts), same parent
-    // path component (Hadoop globs match per path component — a brace
-    // alternation cannot span '/').
-    def parentOf(p: String): String = p.lastIndexOf('/') match {
-      case -1 => ""
-      case i => p.substring(0, i)
-    }
-    def dataVersionExpr(dirs: Seq[DataDir], alias: String): String =
-      versionCaseExpr(dirs.map(d => (d.path, d.version)), alias)
-    def versionCaseExpr(entries: Seq[(String, Int)], alias: String): String =
-      if (entries.size == 1) s"${entries.head._2} AS $alias"
-      else {
-        val whens = entries.map { case (p, v) =>
-          s"WHEN instr(input_file_name(), ${qstr(s"/$p/")}) > 0 THEN $v"
-        }.mkString(" ")
-        // an unmatched path must fail loudly, never NULL out the
-        // delete-guard comparison (same rule as dfAt's pathVersionCol)
-        s"CASE $whens ELSE raise_error('graft: input_file_name() matches " +
-          s"no logged dir of this relation') END AS $alias"
-      }
-    def fromClause(paths: Seq[String]): String =
-      if (paths.size == 1) s"parquet.${qp(s"${ge(dir)}/${ge(paths.head)}")}"
-      else {
-        val parent = parentOf(paths.head)
-        val leaves = paths.map(p => ge(p.substring(parent.length + 1)))
-        val prefix = if (parent.isEmpty) ge(dir) else s"${ge(dir)}/${ge(parent)}"
-        s"parquet.${qp(s"$prefix/{${leaves.mkString(",")}}")}"
-      }
-    // stable grouping (insertion order) so the rendered SQL is
-    // deterministic for a given snapshot
-    def groupBy[A, K](xs: Seq[A])(key: A => K): Seq[Seq[A]] = {
-      val m = new scala.collection.mutable.LinkedHashMap[K, scala.collection.mutable.ArrayBuffer[A]]
-      xs.foreach(x => m.getOrElseUpdate(key(x), scala.collection.mutable.ArrayBuffer.empty) += x)
-      m.values.map(_.toSeq).toSeq
-    }
-    // PARTITIONED dirs stay one-relation-per-dir: partition discovery
-    // over multiple glob-expanded roots that each hold k=v subdirs
-    // demands an explicit `basePath` option (CONFLICTING_DIRECTORY_
-    // STRUCTURES otherwise), which a self-contained SQL view cannot
-    // express. Aggregates over partitioned SQL-served tables are answered
-    // by the sidecar folds at analysis time anyway; only the scan-decline
-    // path pays the per-dir plan, bounded by compaction cadence.
-    val dataGroups = groupBy(s.dataDirs)(d => (
-      s.schema.fields.map(f => d.version < s.fieldOf(f.name).since).toSeq,
-      s.specAt(d.version),
-      parentOf(d.path),
-      if (s.specAt(d.version).nonEmpty) d.path else ""))
-    val branches = dataGroups.map { dirs =>
-      val d0 = dirs.head
-      val cols = s.schema.fields.map { f =>
-        val fi = s.fieldOf(f.name)
-        if (d0.version < fi.since) s"CAST(NULL AS ${f.dataType.sql}) AS ${q(f.name)}"
-        else s"${q(fi.physical)} AS ${q(f.name)}"
-      }
-      s"SELECT ${cols.mkString(", ")}, ${dataVersionExpr(dirs, "`__cv`")} " +
-        s"FROM ${fromClause(dirs.map(_.path))}"
-    }
-    val union = branches.mkString("\nUNION ALL\n")
-    if (s.deletes.isEmpty) s"SELECT $logicalList FROM (\n$union\n)"
-    else {
-      val keys = s.deletes.head.keys
-      val delGroups = groupBy(s.deletes)(del => (del.keys, parentOf(del.path)))
-      val delBranches = delGroups.map { dels =>
-        val cols = dels.head.keys
-          .map(k => s"${q(s.physicalOf(k))} AS ${q(k)}").mkString(", ")
-        s"SELECT $cols, ${versionCaseExpr(dels.map(d => (d.path, d.version)), "`__dv`")} " +
-          s"FROM ${fromClause(dels.map(_.path))}"
-      }
-      val keyCond = keys.map(k => s"__d.${q(k)} <=> __t.${q(k)}").mkString(" AND ")
-      s"""SELECT $logicalList FROM (
-         |$union
-         |) __t WHERE NOT EXISTS (
-         |  SELECT 1 FROM (
-         |${delBranches.mkString("\nUNION ALL\n")}
-         |  ) __d WHERE $keyCond AND __d.`__dv` > __t.`__cv`
-         |)""".stripMargin
-    }
-  }
 
   // ---- maintenance -----------------------------------------------------
 
@@ -2666,7 +2497,7 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
       f.getContentSummary(new Path(dir, d.path)).getLength
     val (small, big) = s.dataDirs.partition(d => sizeOf(d) < smallDirBytes)
     if (small.length < 2) return this
-    val (sub, rows) = writeData(readLogical(s, small), s)
+    val (sub, rows) = writeData(readDirs(s, small), s)
     commit(s.version + 1)((rebase, v) => {
       val b = Option(rebase).getOrElse(s)
       requireSpecStable(b, s)
@@ -2924,7 +2755,7 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     // rows == -1 means staged with an unknown count — still real data;
     // publishStaged commits it, so the AUDIT step must surface it too.
     if (rows == 0) emptyDF(snapshot)
-    else readLogical(snapshot, Seq(DataDir(sub, Int.MaxValue, rows)))
+    else readDirs(snapshot, Seq(DataDir(sub, Int.MaxValue, rows)))
   }
 
   /** WAP step 3 — PUBLISH: metadata-only commit of the staged dir (no
@@ -3236,7 +3067,7 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     if (touched.size == s.dataDirs.size) return full()
     if (touched.isEmpty) return this // predicate can match nothing
     val untouched = s.dataDirs.filterNot(touched.toSet)
-    val (sub, rows) = writeData(f(readLogical(s, touched)), s)
+    val (sub, rows) = writeData(f(readDirs(s, touched)), s)
     dropDirOnRace(sub) {
       commit(s.version + 1)((rebase, v) => {
         val b = Option(rebase).getOrElse(s)
@@ -3468,10 +3299,36 @@ object GraftTable {
 
   /** Backslash-escapes Hadoop glob metacharacters. Spark glob-expands
     * every file-source path, so a table root like `t{1}` read unescaped
-    * silently matches nothing (or a sibling). `,` is special only inside
-    * braces, where [[GraftTable.viewSqlOf]]'s multi-dir form places it. */
-  private def globEscape(p: String): String =
+    * silently matches nothing (or a sibling). Every parquet read of a
+    * table path goes through this, in `graft.catalog` too. */
+  private[graft] def globEscape(p: String): String =
     p.replaceAll("([\\\\\\[\\]{}*?,])", "\\\\$1")
+
+  /** Commit version of each row derived from its file path as a
+    * short-circuiting when-chain over `(dir-relative path, version)`
+    * entries (dir and delete subpaths are UUIDs — unambiguous). Shared by
+    * every multi-commit read, table-side and reader-side, so the plan
+    * holds ONE parquet relation instead of one per dir/delete file (r14:
+    * plan size — and with it per-task deserialize time — grew linearly
+    * with commit count; chain length is bounded by the stream fold's
+    * maxPendingDeletes / compaction cadence). */
+  private[graft] def pathVersionCol(entries: Seq[(String, Int)]): Column =
+    entries.tail.foldLeft(
+      when(input_file_name().contains(s"/${entries.head._1}/"),
+        lit(entries.head._2))) { case (w, (p, v)) =>
+      w.when(input_file_name().contains(s"/$p/"), lit(v))
+    }
+      // Unreachable today (the column is built directly on the parquet
+      // read, and subpaths are UUIDs), but a refactor that interposes a
+      // cache/checkpoint — where input_file_name() is empty — would
+      // otherwise yield NULL here, null out the delete anti-join
+      // condition (or the reader-side delete map's max), and silently
+      // resurrect deleted rows. Fail loudly instead (VERDICT r14 item 3).
+      .otherwise(raise_error(concat(
+        lit("graft: cannot derive commit version — input_file_name() '"),
+        input_file_name(),
+        lit("' matches no logged dir (was the read re-materialized " +
+          "through a cache/checkpoint?)"))))
 
   /** A copy-on-write replace lost its OCC race against a row-changing
     * concurrent commit: the replacement was computed from a stale

@@ -9,8 +9,8 @@ import graft.catalog.{GraftCatalog, GraftSparkSessionExtensions}
 import graft.table.{GraftTable, PartitionField}
 
 /** The catalog read path: plain spark.sql against graft.<ns>.<table>
-  * through the session-extensions resolution rule (+ ViewCatalog for
-  * SHOW VIEWS metadata), on a session built with the graft extensions. */
+  * through the session-extensions resolution rule (+ TableCatalog
+  * listing metadata), on a session built with the graft extensions. */
 class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var prior: Option[SparkSession] = None
@@ -95,17 +95,16 @@ class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == Seq(2L))
   }
 
-  test("listViews metadata and joins across catalog tables") {
+  test("listTables metadata and joins across catalog tables") {
     mkTable("db2", "t1", StructType(Seq(StructField("id", LongType))))
       .append(Seq(1L, 2L).toDF("id"))
     mkTable("db2", "t2", StructType(Seq(StructField("id", LongType))))
       .append(Seq(2L, 3L).toDF("id"))
-    // vanilla Spark doesn't route SHOW VIEWS to v2 catalogs; the catalog
-    // metadata API is the surface
+    // the catalog metadata API is the surface
     val cat = spark.sessionState.catalogManager.catalog("graft")
-      .asInstanceOf[org.apache.spark.sql.connector.catalog.ViewCatalog]
-    val views = cat.listViews("db2").map(_.name()).toSet
-    assert(views == Set("t1", "t2"))
+      .asInstanceOf[org.apache.spark.sql.connector.catalog.TableCatalog]
+    val tables = cat.listTables(Array("db2")).map(_.name()).toSet
+    assert(tables == Set("t1", "t2"))
     val joined = spark.sql(
       "SELECT a.id FROM graft.db2.t1 a JOIN graft.db2.t2 b ON a.id = b.id")
       .as[Long].collect().toSeq

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.table.GraftTable
@@ -8,12 +10,10 @@ import graft.streaming.StreamOps
 
 /** Focused spec for the round-15 optimization changes:
   *
-  *  - `viewSqlOf` renders ONE parquet relation per homogeneous dir group
-  *    (brace glob + CASE on input_file_name) instead of one per dir —
-  *    results must be identical to the per-dir rendering (≡ dfAt), the
-  *    relation count must collapse, schema-evolution NULL projection must
-  *    survive grouping, and glob metacharacters in the table root must
-  *    read literally;
+  *  - a snapshot reads as ONE data relation (plus one delete relation)
+  *    whatever its dir count — the relation count must stay collapsed,
+  *    schema-evolution NULL projection must survive the single relation,
+  *    and glob metacharacters in the table root must read literally;
   *  - the one-md5-pass ingest prep (`md5DocHashPairs` +
   *    `md5BandedSignatureFromPairs`) must be BIT-IDENTICAL to the
   *    two-pass `md5DocSets` + `md5BandedSignature` construction;
@@ -23,16 +23,19 @@ import graft.streaming.StreamOps
   *    cause and stays a `ConcurrentOverwriteException` to type-keyed
   *    outer retriers (VERDICT r14 item 8).
   */
-class R15OptimizationSpec extends AnyFunSuite {
+class R15OptimizationSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.session
 
-  private def relationCount(sql: String): Int =
-    "FROM parquet\\.".r.findAllIn(sql).size
+  /** File scans in `df`'s executed plan (run it first so AQE settles). */
+  private def fileScans(df: org.apache.spark.sql.DataFrame): Int =
+    collectWithSubqueries(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec => s
+    }.size
 
   private def collectSorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
-  test("viewSql collapses same-shape dirs to one relation and matches dfAt") {
+  test("toDF collapses same-shape dirs to one data and one delete scan") {
     import spark.implicits._
     val df = (1 to 300).map(i => (i.toLong, s"v$i")).toDF("id", "v")
     val t = GraftTable.create(spark, TestSpark.tmpDir("vsql-group"), df.schema,
@@ -48,18 +51,21 @@ class R15OptimizationSpec extends AnyFunSuite {
     val snap = t.snapshot
     assert(snap.dataDirs.size >= 5 && snap.deletes.size >= 2,
       s"fixture shape drifted: ${snap.dataDirs.size} dirs / ${snap.deletes.size} deletes")
-    val sql = t.viewSql
-    // one data relation (all dirs same shape) + one delete relation
-    assert(relationCount(sql) == 2,
-      s"expected 2 parquet relations, got ${relationCount(sql)} in:\n$sql")
-    assert(collectSorted(spark.sql(sql)) == collectSorted(t.toDF),
-      "grouped view SQL disagrees with dfAt")
-    // the delete-version guard must still apply: upd2_7 wins over upd7
-    val v7 = spark.sql(sql).filter($"id" === 7L).collect().map(_.getString(1)).toSeq
-    assert(v7 == Seq("upd2_7"), s"MoR guard broken: id=7 -> $v7")
+    val read = t.toDF
+    val want = (1 to 300).map { i =>
+      val v = i match {
+        case 5 => "upd5"; case 7 => "upd2_7"; case 9 => "upd2_9"; case _ => s"v$i"
+      }
+      s"[$i,$v]"
+    }.sorted
+    assert(collectSorted(read) == want, "snapshot read disagrees with the model")
+    // one data relation (all dirs) + one delete relation
+    assert(fileScans(read) == 2,
+      s"expected 2 file scans, got ${fileScans(read)} in\n${read.queryExecution.executedPlan}")
+    assert(collectSorted(t.scan($"id" > 0L)) == want, "scan disagrees with dfAt")
   }
 
-  test("viewSql keeps schema-evolution NULL projection across grouping") {
+  test("toDF keeps schema-evolution NULL projection over one relation") {
     import spark.implicits._
     val df = (1 to 50).map(i => (i.toLong, s"a$i")).toDF("id", "a")
     val t = GraftTable.create(spark, TestSpark.tmpDir("vsql-evolve"), df.schema)
@@ -68,18 +74,18 @@ class R15OptimizationSpec extends AnyFunSuite {
     t.addColumn("b", org.apache.spark.sql.types.StringType)
     val withB = (51 to 60).map(i => (i.toLong, s"a$i", s"b$i")).toDF("id", "a", "b")
     t.append(withB)
-    val sql = t.viewSql
-    // pre-`since` dirs group together (NULL-projected b), the post-add
-    // dir is its own group: exactly 2 relations
-    assert(relationCount(sql) == 2,
-      s"expected 2 parquet relations (old group + new), got:\n$sql")
-    val got = collectSorted(spark.sql(sql))
-    assert(got == collectSorted(t.toDF), "evolved view SQL disagrees with dfAt")
-    val nullB = spark.sql(sql).filter(col("b").isNull).count()
+    val read = t.toDF
+    assert(read.count() == 60L)
+    val nullB = read.filter(col("b").isNull).count()
     assert(nullB == 50L, s"pre-add rows must project NULL b (got $nullB)")
+    // pre- and post-add dirs share ONE relation
+    assert(fileScans(read) == 1,
+      s"expected 1 file scan, got ${fileScans(read)} in\n${read.queryExecution.executedPlan}")
+    assert(collectSorted(t.scan($"id" > 0L)) == collectSorted(read),
+      "evolved scan disagrees with dfAt")
   }
 
-  test("viewSql reads literally from a table root containing glob metacharacters") {
+  test("toDF reads literally from a table root containing glob metacharacters") {
     import spark.implicits._
     // a root with every Hadoop glob special the escaper handles; the
     // sibling decoy dir would be matched by an UNescaped `t{x}` pattern
@@ -90,11 +96,11 @@ class R15OptimizationSpec extends AnyFunSuite {
       formatVersion = 2)
     t.append(df.filter($"id" <= 20))
     t.append(df.filter($"id" > 20))
+    GraftTable.create(spark, s"$base/tx1", df.schema).append(df.limit(3))
     t.rowDelta(Seq(3L).toDF("id"),
       Seq((3L, "upd3")).toDF("id", "v"), Seq("id"))
-    val sql = t.viewSql
-    val got = spark.sql(sql)
-    assert(got.count() == 40L, s"glob-metachar root misread:\n$sql")
+    val got = t.toDF
+    assert(got.count() == 40L, "glob-metachar root misread")
     assert(got.filter($"id" === 3L).collect().map(_.getString(1)).toSeq
       == Seq("upd3"), "MoR guard lost under glob-escaped root")
   }
@@ -146,14 +152,7 @@ class R15OptimizationSpec extends AnyFunSuite {
   }
 
   test("pathVersionCol fails loudly when input_file_name is empty (interposed cache)") {
-    import spark.implicits._
-    val df = Seq((1L, "a")).toDF("id", "v")
-    val t = GraftTable.create(spark, TestSpark.tmpDir("pvc-guard"), df.schema)
-    val m = t.getClass.getDeclaredMethods
-      .find(_.getName == "pathVersionCol").getOrElse(fail("pathVersionCol not found"))
-    m.setAccessible(true)
-    val vcol = m.invoke(t, Seq(("data/no-such-dir", 7)))
-      .asInstanceOf[org.apache.spark.sql.Column]
+    val vcol = GraftTable.pathVersionCol(Seq(("data/no-such-dir", 7)))
     // a cached (non-file) relation evaluates input_file_name() to "" —
     // exactly the refactor hazard VERDICT r14 item 3 names. The guard
     // must THROW, never yield a NULL version that un-guards the delete

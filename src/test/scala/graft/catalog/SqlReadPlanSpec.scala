@@ -22,7 +22,11 @@ import graft.table.{GraftTable, PartitionField}
   *  - table roots with Hadoop glob metacharacters read literally through
   *    both `toDF` and `spark.sql`;
   *  - a dir committed before a column's add-version reads NULL for it
-  *    through both paths, even when its files carry a column of that name.
+  *    through every data-dir read (toDF, SQL, scan, incremental and
+  *    changelog reads, rewrites), even when its files carry a column of
+  *    that name;
+  *  - SQL UPDATE and MERGE over a pending delete file read it literally
+  *    under a glob-metacharacter root.
   */
 class SqlReadPlanSpec extends AnyFunSuite with BeforeAndAfterAll
     with AdaptiveSparkPlanHelper {
@@ -148,25 +152,53 @@ class SqlReadPlanSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(spark.sql("SELECT v FROM graftglob.ns.t WHERE id = 3")
       .collect().map(_.getString(0)).toSeq == Seq("upd3"),
       "MoR guard lost under a glob-escaped root")
+    // row-level SQL DML over the pending delete file reads it literally too
+    spark.sql("UPDATE graftglob.ns.t SET v = 'u5' WHERE id = 5")
+    Seq((6L, "m6"), (41L, "m41")).toDF("id", "v").createOrReplaceTempView("glob_src")
+    spark.sql("""MERGE INTO graftglob.ns.t t USING glob_src s ON t.id = s.id
+                 WHEN MATCHED THEN UPDATE SET v = s.v
+                 WHEN NOT MATCHED THEN INSERT *""")
+    val want = (1L to 41L).map { i =>
+      val v = i match {
+        case 3L => "upd3"; case 5L => "u5"; case 6L => "m6"; case 41L => "m41"; case _ => s"v$i"
+      }
+      s"[$i,$v]"
+    }.sorted
+    assert(sorted(t.toDF) == want, "SQL UPDATE/MERGE under a glob-escaped root")
+    assert(sorted(spark.sql("SELECT id, v FROM graftglob.ns.t")) == want)
   }
 
   test("a dir committed before a column's add-version reads NULL for it via toDF and SQL") {
     val wh = tmp("graft_sqlsince")
     GraftCatalog.register(spark, wh, "graftsince")
-    val t = GraftTable.create(spark, s"$wh/ns/t", StructType(Seq(
-      StructField("id", LongType), StructField("v", StringType))),
-      key = Seq("id"), formatVersion = 2)
-    t.append(Seq((1L, "a")).toDF("id", "v"))
-    // a foreign dir wider than the table: its `extra` predates the column
-    val src = s"${tmp("graft_sqlsince_src")}/in"
-    Seq((2L, "b", "FOREIGN")).toDF("id", "v", "extra").write.parquet(src)
-    t.addFiles(src)
-    t.addColumn("extra", StringType)
-    t.append(Seq((3L, "c", "X")).toDF("id", "v", "extra"))
+    def fixture(name: String): GraftTable = {
+      val t = GraftTable.create(spark, s"$wh/ns/$name", StructType(Seq(
+        StructField("id", LongType), StructField("v", StringType))),
+        key = Seq("id"), formatVersion = 2)
+      t.append(Seq((1L, "a")).toDF("id", "v"))
+      // a foreign dir wider than the table: its `extra` predates the column
+      val src = s"${tmp("graft_sqlsince_src")}/in"
+      Seq((2L, "b", "FOREIGN")).toDF("id", "v", "extra").write.parquet(src)
+      t.addFiles(src)
+      t.addColumn("extra", StringType)
+      t.append(Seq((3L, "c", "X")).toDF("id", "v", "extra"))
+    }
+    val t = fixture("t")
     val want = Seq("[1,a,null]", "[2,b,null]", "[3,c,X]")
     val sql = "SELECT id, v, extra FROM graftsince.ns.t"
     assert(sorted(t.toDF) == want, "toDF leaked a pre-add value")
     assert(sorted(spark.sql(sql)) == want, "catalog SQL leaked a pre-add value")
+    // every other data-dir read shares the gate
+    val cur = t.currentVersion
+    assert(sorted(t.scan($"id" > 0L)) == want, "scan leaked a pre-add value")
+    assert(sorted(t.appendsBetween(0, cur)) == want, "appendsBetween leaked a pre-add value")
+    assert(sorted(t.changesBetween(0, cur).filter($"_change_type" === "insert")
+      .select("id", "v", "extra")) == want, "changesBetween leaked a pre-add value")
+    // a rewrite must not bake the pre-add value into a post-add dir
+    val r = fixture("r")
+    r.rewriteSmallDirs()
+    assert(r.snapshot.dataDirs.size == 1, "rewriteSmallDirs did not fold the fixture")
+    assert(sorted(r.toDF) == want, "rewriteSmallDirs wrote a pre-add value")
     // the same gate on the merge-on-read branch
     t.rowDelta(Seq(1L).toDF("id"), Seq((1L, "a2", "Y")).toDF("id", "v", "extra"), Seq("id"))
     val want2 = Seq("[1,a2,Y]", "[2,b,null]", "[3,c,X]")
