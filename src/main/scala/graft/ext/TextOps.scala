@@ -1,6 +1,7 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.ops.Tables._
@@ -8,8 +9,11 @@ import graft.ops.Tables._
 /** Text-analysis + deduplication operators over the `documents` table —
   * the training-data-pipeline surface (builder prompt / SURVEY.md §7.1.4).
   * Everything is built from codegen'd built-ins and higher-order array
-  * functions; no UDFs, no driver-side loops, every stage keyed and
-  * distributable.
+  * functions; no UDFs, every stage keyed and distributable. The one
+  * driver-side step is sized: [[connectedComponents]] runs union-find on
+  * the driver only for an edge set that fits
+  * `spark.sql.autoBroadcastJoinThreshold`, and the distributed loop
+  * otherwise.
   *
   * Scale design:
   *  - exact dedup: hash-groupBy on the text (shuffle on a 64-bit digest,
@@ -337,9 +341,9 @@ object TextOps {
                                    maxBucket: Int): DataFrame = {
     graft.functions.TextSignatureFunctions.register(spark)
     val banded = bandedSignature(reps, "doc_id", k, bands)
-      // tiny (reps × bands rows of scalars) but feeds five subtrees
-      // (size-agg + both all-pair sides + star side); persisting it
-      // computes the k-hash signature once instead of per-subtree
+      // tiny (reps × bands rows of scalars) but feeds three subtrees
+      // (both all-pair sides + star side); persisting it computes the
+      // k-hash signature once instead of per-subtree
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Oversized-bucket guard: a (band, band_hash) bucket of n members
     // emits ~n²/2 candidates — near-identical boilerplate FAMILIES (phase
@@ -351,12 +355,12 @@ object TextOps {
     // and hub pairs still pass exact-Jaccard verification. Only
     // member–member pairs of mega-buckets are not emitted — the
     // pair-level price of bounded cost on adversarial corpora. The
-    // default cap is far above anything a natural bucket reaches, and
-    // the (band, band_hash) size aggregate is tiny (reps × bands rows).
-    val sized = banded.join(
-      banded.groupBy(col("band"), col("band_hash"))
-        .agg(count(lit(1)).as("__n"), min(col("doc_id")).as("__hub")),
-      Seq("band", "band_hash"))
+    // default cap is far above anything a natural bucket reaches. Size
+    // and hub are one window over the bucket, not an aggregate joined
+    // back, so the self-join below reuses the window's partitioning.
+    val bucket = Window.partitionBy(col("band"), col("band_hash"))
+    val sized = banded.select(col("*"), count(lit(1)).over(bucket).as("__n"),
+      min(col("doc_id")).over(bucket).as("__hub"))
     val small = sized.filter(col("__n") <= maxBucket)
     val allPairs = small.select(col("doc_id").as("a_id"), col("band"), col("band_hash"))
       .join(small.select(col("doc_id").as("b_id"), col("band"), col("band_hash")),
@@ -409,20 +413,74 @@ object TextOps {
     out
   }
 
-  /** Connected components over an undirected pair list by iterative
-    * min-label propagation — the step that turns pairwise near-dup
-    * matches into the actual dedup decision ("keep the smallest id of
-    * every cluster"). Each iteration is one shuffle (every node adopts
-    * the smallest label among itself and its neighbors) and converges
-    * after O(component diameter) iterations — near-dup clusters are
-    * dense, so diameters are tiny. The loop touches only nodes that
-    * appear in a pair; convergence is one count per iteration (no
-    * driver-side graph state). Returns (node, cluster = min id of its
-    * component). */
+  /** Connected components over an undirected pair list — the step that
+    * turns pairwise near-dup matches into the actual dedup decision
+    * ("keep the smallest id of every cluster"). Returns (node, cluster =
+    * min id of its component) for every node that appears in a pair.
+    *
+    * Size rule: the driver holds the edge set when its two id columns fit
+    * `spark.sql.autoBroadcastJoinThreshold` — the session's existing
+    * budget for driver-held relations (-1 never) — at the id types'
+    * `defaultSize` per id. One bounded action (`limit(cap + 1)`) collects
+    * at most one edge past that budget; if the edges fit, union-find runs
+    * on the driver. Larger graphs, ids other than matching Int/Long
+    * columns, and NULL ids take [[componentsLoop]], the distributed
+    * min-label propagation. Both paths return the same rows and schema.
+    * The driver path persists nothing; it also labels graphs whose
+    * diameter exceeds `maxIters`, which only bounds the loop. */
   def connectedComponents(pairs: DataFrame, a: String, b: String,
-                          maxIters: Int = 20): DataFrame = {
+                          maxIters: Int = 20): DataFrame =
+    driverComponents(pairs, a, b).getOrElse(componentsLoop(pairs, a, b, maxIters))
+
+  /** [[connectedComponents]]' driver path: None when the edge set is over
+    * the size rule or its ids are not one of the supported types. */
+  private def driverComponents(pairs: DataFrame, a: String,
+                               b: String): Option[DataFrame] = {
+    val ids = pairs.select(col(a), col(b))
+    val Array(fa, fb) = ids.schema.fields
+    val t = fa.dataType
+    val budget = pairs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (budget < 0 || fb.dataType != t || (t != LongType && t != IntegerType))
+      return None
+    val cap = (budget / (2L * t.defaultSize)).min(Int.MaxValue - 1L).toInt
+    val edges = ids.limit(cap + 1).collect()
+    if (edges.length > cap || edges.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+      return None
+    // union-find whose root is always the component's minimum id — the
+    // label the loop converges to
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var root = x
+      while (parent.getOrElseUpdate(root, root) != root) root = parent(root)
+      var y = x
+      while (y != root) { val up = parent(y); parent(y) = root; y = up }
+      root
+    }
+    edges.foreach { r =>
+      val ra = find(r.getAs[Number](0).longValue)
+      val rb = find(r.getAs[Number](1).longValue)
+      if (ra != rb) parent(ra.max(rb)) = ra.min(rb)
+    }
+    val typed: Long => Any = if (t == IntegerType) _.toInt else identity
+    val rows = parent.keys.toArray.map(n => Row(typed(n), typed(find(n))))
+    // the loop's columns are NULL-able exactly when either input id is
+    val nullable = fa.nullable || fb.nullable
+    Some(pairs.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(Seq(StructField("node", t, nullable),
+        StructField("cluster", t, nullable)))))
+  }
+
+  /** [[connectedComponents]]' distributed path, by iterative min-label
+    * propagation. Each iteration is one shuffle (every node adopts the
+    * smallest label among itself and its neighbors) and converges after
+    * O(component diameter) iterations — near-dup clusters are dense, so
+    * diameters are tiny. The loop touches only nodes that appear in a
+    * pair; convergence is one count per iteration. Fails rather than
+    * return split components when `maxIters` is too few. */
+  private[graft] def componentsLoop(pairs: DataFrame, a: String, b: String,
+                                    maxIters: Int): DataFrame = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val edges = pairs.select(col(a).as("node"), col(b).as("peer"))
+    val undirected = pairs.select(col(a).as("node"), col(b).as("peer"))
       .unionAll(pairs.select(col(b).as("node"), col(a).as("peer")))
       .persist(MEMORY_AND_DISK)
     // BYTE-GATED loop shuffle width (r15, guide §2.2/§2.5; the write-side
@@ -437,22 +495,27 @@ object TextOps {
     // 8-core). The width is derived from the MEASURED cached size of the
     // edge set against the session's advisory partition size — at real
     // scale the estimate exceeds the session setting and this is a
-    // no-op; it can only narrow, never widen. Conf is restored in
-    // `finally`; the narrowing is scoped to this driver-side loop.
-    edges.count() // materialize so the cache reports ACTUAL bytes
+    // no-op; it can only narrow, never widen.
+    undirected.count() // materialize so the cache reports ACTUAL bytes
     val sess = pairs.sparkSession
-    val prevParts = sess.conf.get("spark.sql.shuffle.partitions")
     val loopParts: Option[Int] = try {
-      val bytes = edges.queryExecution.optimizedPlan.stats.sizeInBytes
+      val bytes = undirected.queryExecution.optimizedPlan.stats.sizeInBytes
       val advisory = sess.conf.get(
         "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")
       val advisoryBytes = org.apache.spark.network.util.JavaUtils
         .byteStringAsBytes(advisory)
       val p = (bytes / advisoryBytes).toLong + 1
-      if (p < prevParts.toLong) Some(p.toInt.max(1)) else None
+      if (p < sess.conf.get("spark.sql.shuffle.partitions").toLong) Some(p.toInt) else None
     } catch { case _: Exception => None }
-    loopParts.foreach(p => sess.conf.set("spark.sql.shuffle.partitions", p))
-    try {
+    // The width is plan-local: the loop's frames are planned in a private
+    // clone of the session that carries it, so every loop exchange is p
+    // wide and no query on the caller's session sees it. `repartition(p,
+    // …)` on the frames cannot do this: at p = 1 it plans SinglePartition,
+    // and sort-merge joins and post-checkpoint iterations then shuffle at
+    // the session width.
+    val edges = loopParts.fold(undirected)(p =>
+      org.apache.spark.sql.GraftShim.withSessionConf(
+        undirected, "spark.sql.shuffle.partitions", p.toString))
     var labels = edges.groupBy(col("node"))
       .agg(least(min(col("peer")), col("node")).as("label"))
       .persist(MEMORY_AND_DISK)
@@ -488,25 +551,29 @@ object TextOps {
       i += 1
     }
     edges.unpersist()
-    // silent wrong labels are worse than failing: a component whose
-    // diameter exceeds the budget exits the loop split in pieces
-    require(converged,
-      s"connected components did not converge in $maxIters iterations " +
-        "(a component's diameter exceeds the budget); raise maxIters")
-    // eager localCheckpoint so the final labels can unpersist NOW —
-    // the returned frame reads its own blocks (context-cleaner reclaimed
-    // when dropped) and nothing lingers in the session cache
-    val out = labels.select(col("node"), col("label").as("cluster"))
-      .localCheckpoint(true)
+    // eager localCheckpoint so the final labels can unpersist NOW — the
+    // returned frame reads its own blocks (context-cleaner reclaimed when
+    // dropped), nothing lingers in the session cache, and it is re-rooted
+    // in the caller's session so later queries over it plan at the
+    // session's own width
+    val out =
+      if (converged) Some(org.apache.spark.sql.GraftShim.ofRows(sess,
+        labels.select(col("node"), col("label").as("cluster"))
+          .localCheckpoint(true).queryExecution.analyzed))
+      else None
     // out's lineage is truncated by its own checkpoint, so the final
     // labels frame (a checkpoint itself on every-5th iterations — the
     // root-only shim drop handles that case; a plain persist otherwise —
-    // unpersist handles that one) is safe to free now
+    // unpersist handles that one) is safe to free now; on failure nothing
+    // may stay cached either
     labels.unpersist()
     org.apache.spark.sql.GraftShim.dropCheckpointBlocks(labels)
-    out
-    } finally loopParts.foreach(_ =>
-      sess.conf.set("spark.sql.shuffle.partitions", prevParts))
+    // silent wrong labels are worse than failing: a component whose
+    // diameter exceeds the budget exits the loop split in pieces
+    require(out.isDefined,
+      s"connected components did not converge in $maxIters iterations " +
+        "(a component's diameter exceeds the budget); raise maxIters")
+    out.get
   }
 
   /** Near-dup clusters of the documents table: MinHash-LSH pairs →
@@ -520,9 +587,10 @@ object TextOps {
   /** Cluster assignment over the EXACT blocked n-gram-Jaccard pair list:
     * the same [[connectedComponents]] machinery [[dedupClusters]] runs on
     * LSH edges, but with an oracle-checkable edge set — so the component
-    * logic itself (min-label propagation, convergence, cluster = min id)
-    * is pinned to a DuckDB recursive-CTE transitive closure instead of
-    * only unit specs. */
+    * logic itself (cluster = min id) is pinned to a DuckDB recursive-CTE
+    * transitive closure instead of only unit specs. At fixture sizes the
+    * edges take the driver path; `PropertyLawsSpec` holds the loop to
+    * the same answers. */
   private def clustersExactQuery(spark: SparkSession, dir: String): DataFrame =
     connectedComponents(dedupNgramJaccard(spark, dir), "a_id", "b_id")
       .select(col("node").cast(LongType).as("doc_id"),

@@ -291,6 +291,13 @@ class ExtOpsSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 5L -> 5L, 7L -> 5L))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the driver path left frames in the session cache")
+    val looped = graft.ext.TextOps.componentsLoop(pairs, "a_id", "b_id", maxIters = 20)
+      .as[(Long, Long)].collect().toMap
+    assert(looped == got, "the distributed loop disagrees with the driver path")
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the distributed loop left frames in the session cache")
     // end-to-end shape on the real corpus: every clustered doc points at
     // its cluster's minimum member
     val cl = graft.ext.TextOps.dedupClusters(spark, "/root/testdata/sf0.001")
@@ -298,6 +305,62 @@ class ExtOpsSpec extends AnyFunSuite {
     val roots = cl.select($"cluster_id".as("root")).distinct()
     assert(cl.join(roots, cl("doc_id") === col("root"), "left_semi")
       .filter($"doc_id" =!= $"cluster_id").count() == 0)
+  }
+
+  test("componentsLoop narrows its shuffle width in its own plans, never in the session") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import scala.jdk.CollectionConverters._
+    val sessionWidth = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // shuffle widths of a plan, through AQE stages and (once each) the
+    // cached plans of the persisted frames it reads
+    def shuffleWidths(plan: SparkPlan, seen: java.util.Set[AnyRef]): Seq[Int] = plan match {
+      case a: AdaptiveSparkPlanExec => shuffleWidths(a.executedPlan, seen)
+      case q: QueryStageExec => shuffleWidths(q.plan, seen)
+      case m: InMemoryTableScanExec =>
+        if (seen.add(m.relation.cacheBuilder)) shuffleWidths(m.relation.cachedPlan, seen)
+        else Nil
+      case x: ShuffleExchangeExec =>
+        x.outputPartitioning.numPartitions +: shuffleWidths(x.child, seen)
+      case other => other.children.flatMap(shuffleWidths(_, seen))
+    }
+    val loopQueries = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = loopQueries.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // a 40-node chain: ~40 iterations whose KB-sized frames measure a
+    // loop width of 1, while another thread keeps planning a groupBy on
+    // the same session
+    val chain = (0L until 39L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    val observed = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    @volatile var done = false
+    val observer = new Thread(() => while (!done) {
+      val planned = spark.range(64).groupBy(col("id") % 8).count().queryExecution.executedPlan
+      observed.addAll(shuffleWidths(planned, new java.util.HashSet[AnyRef]()).asJava)
+      Thread.sleep(5)
+    })
+    spark.listenerManager.register(listener)
+    val comps = try {
+      observer.start()
+      TextOps.componentsLoop(chain, "a_id", "b_id", maxIters = 60)
+    } finally {
+      done = true
+      observer.join()
+      spark.listenerManager.unregister(listener)
+    }
+    assert(comps.as[(Long, Long)].collect().toMap == (0L to 39L).map(_ -> 0L).toMap)
+    val observedWidths = observed.asScala.toSet
+    assert(observedWidths == Set(sessionWidth),
+      s"a concurrent groupBy planned widths $observedWidths, not $sessionWidth")
+    org.apache.spark.sql.GraftShim.drainListenerBus(spark)
+    val seen = new java.util.HashSet[AnyRef]()
+    val loopWidths = loopQueries.asScala.toSeq.flatMap(qe => shuffleWidths(qe.executedPlan, seen))
+    assert(loopWidths.nonEmpty && loopWidths.toSet == Set(1),
+      s"the loop's exchanges should all be 1 wide, got widths ${loopWidths.toSet}")
+    assert(spark.conf.get("spark.sql.shuffle.partitions").toInt == sessionWidth)
   }
 
   test("pqEncode: codes and reconstruction error match a plain-Scala replay " +

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,6 +16,43 @@ class PropertyLawsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.session
   import spark.implicits._
 
+  /** Reference: driver-side union-find with path compression; the
+    * minimum member of each component, for every node that touches an
+    * edge. */
+  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElse(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    def union(a: Long, b: Long): Unit = {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    edges.foreach { case (a, b) => union(a, b) }
+    val nodes = edges.flatMap(t => Seq(t._1, t._2)).distinct
+    nodes.groupBy(find).flatMap { case (_, members) =>
+      val m = members.min; members.map(_ -> m)
+    }
+  }
+
+  private def labels(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getAs[Number](0).longValue -> r.getAs[Number](1).longValue).toMap
+
+  /** The driver path (`connectedComponents` under the default size
+    * rule), the forced distributed loop and the reference agree on rows,
+    * and both paths on the output schema. */
+  private def assertPathsAgree(pairs: DataFrame, expected: Map[Long, Long],
+                               clue: String): Unit = {
+    val fast = ext.TextOps.connectedComponents(pairs, "a_id", "b_id", maxIters = 40)
+    assert(fast.queryExecution.analyzed.isInstanceOf[LocalRelation],
+      s"$clue: a small graph should take the driver path")
+    val loop = ext.TextOps.componentsLoop(pairs, "a_id", "b_id", maxIters = 40)
+    assert(fast.schema == loop.schema, s"$clue: schemas differ")
+    assert(labels(fast) == expected, s"$clue: driver path")
+    assert(labels(loop) == expected, s"$clue: loop")
+  }
+
   test("connectedComponents equals union-find on random graphs (seeded ×5)") {
     val rnd = new scala.util.Random(20260814L)
     for (round <- 1 to 5) {
@@ -21,28 +60,27 @@ class PropertyLawsSpec extends AnyFunSuite {
       val nEdges = 20 + rnd.nextInt(60)
       val edges = Seq.fill(nEdges)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter { case (a, b) => a != b }
-      // reference: driver-side union-find with path compression
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        val p = parent.getOrElse(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      def union(a: Long, b: Long): Unit = {
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      edges.foreach { case (a, b) => union(a, b) }
-      // expected: min member of each component, only nodes that touch an edge
-      val nodes = edges.flatMap(t => Seq(t._1, t._2)).distinct
-      val byRoot = nodes.groupBy(find)
-      val expected = byRoot.flatMap { case (_, members) =>
-        val m = members.min; members.map(_ -> m)
-      }.toMap
-      val got = ext.TextOps.connectedComponents(
-        edges.toDF("a_id", "b_id"), "a_id", "b_id", maxIters = 40)
-        .as[(Long, Long)].collect().toMap
-      assert(got == expected, s"round $round: n=$n edges=${edges.size}")
+      val expected = unionFind(edges)
+      val clue = s"round $round: n=$n edges=${edges.size}"
+      assertPathsAgree(edges.toDF("a_id", "b_id"), expected, s"$clue, Long ids")
+      assertPathsAgree(edges.map { case (a, b) => (a.toInt, b.toInt) }.toDF("a_id", "b_id"),
+        expected, s"$clue, Int ids")
     }
+  }
+
+  test("connectedComponents: empty pair lists; a chain deeper than maxIters") {
+    assertPathsAgree(Seq.empty[(Long, Long)].toDF("a_id", "b_id"), Map.empty, "empty, Long ids")
+    assertPathsAgree(Seq.empty[(Int, Int)].toDF("a_id", "b_id"), Map.empty, "empty, Int ids")
+    // chain 0-1-…-11: diameter 11, labels need more than 4 rounds to settle
+    val chainEdges = (0L until 11L).map(i => (i, i + 1))
+    val chain = chainEdges.toDF("a_id", "b_id")
+    assert(labels(ext.TextOps.connectedComponents(chain, "a_id", "b_id", maxIters = 4)) ==
+      unionFind(chainEdges), "the driver path is not bounded by maxIters")
+    val err = intercept[IllegalArgumentException](
+      ext.TextOps.componentsLoop(chain, "a_id", "b_id", maxIters = 4))
+    assert(err.getMessage.contains("did not converge"), err.getMessage)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a loop that did not converge left frames in the session cache")
   }
 
   test("sorted_intersect_count equals Set.intersect on random long sets (seeded ×20)") {
