@@ -418,19 +418,32 @@ object TextOps {
     * ("keep the smallest id of every cluster"). Returns (node, cluster =
     * min id of its component) for every node that appears in a pair.
     *
-    * Size rule: the driver holds the edge set when its two id columns fit
+    * Size rule: the driver holds the edge set when it fits
     * `spark.sql.autoBroadcastJoinThreshold` — the session's existing
-    * budget for driver-held relations (-1 never) — at the id types'
-    * `defaultSize` per id. One bounded action (`limit(cap + 1)`) collects
-    * at most one edge past that budget; if the edges fit, union-find runs
-    * on the driver. Larger graphs, ids other than matching Int/Long
-    * columns, and NULL ids take [[componentsLoop]], the distributed
-    * min-label propagation. Both paths return the same rows and schema.
-    * The driver path persists nothing; it also labels graphs whose
-    * diameter exceeds `maxIters`, which only bounds the loop. */
+    * budget for driver-held relations (-1 never) — at
+    * [[driverBytesPerEdge]] of driver heap per edge. One bounded action
+    * (`limit(cap + 1)`) collects at most one edge past that budget; if
+    * the edges fit, union-find runs on the driver. Larger graphs, ids
+    * other than matching Int/Long columns, and NULL ids take
+    * [[componentsLoop]], the distributed min-label propagation. Both
+    * paths return the same rows and schema. The driver path persists
+    * nothing; it also labels graphs whose diameter exceeds `maxIters`,
+    * which only bounds the loop. */
   def connectedComponents(pairs: DataFrame, a: String, b: String,
                           maxIters: Int = 20): DataFrame =
     driverComponents(pairs, a, b).getOrElse(componentsLoop(pairs, a, b, maxIters))
+
+  /** Peak driver heap per edge on the driver path, worst case (every
+    * edge brings two new nodes): the collected rows with their encoded
+    * copies, then the id arrays and the output rows with their local
+    * relation. Measured at 365 bytes (200k edges, JDK 17, compressed
+    * pointers), 190 when nodes are few; rounded up. */
+  private[graft] val driverBytesPerEdge = 512L
+
+  /** Most edges the driver path takes under a `budget` of driver bytes;
+    * -1 when the budget is negative (the path is off). */
+  private[graft] def driverEdgeCap(budget: Long): Int =
+    if (budget < 0) -1 else (budget / driverBytesPerEdge).min(Int.MaxValue - 1L).toInt
 
   /** [[connectedComponents]]' driver path: None when the edge set is over
     * the size rule or its ids are not one of the supported types. */
@@ -439,35 +452,45 @@ object TextOps {
     val ids = pairs.select(col(a), col(b))
     val Array(fa, fb) = ids.schema.fields
     val t = fa.dataType
-    val budget = pairs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    if (budget < 0 || fb.dataType != t || (t != LongType && t != IntegerType))
-      return None
-    val cap = (budget / (2L * t.defaultSize)).min(Int.MaxValue - 1L).toInt
-    val edges = ids.limit(cap + 1).collect()
-    if (edges.length > cap || edges.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-      return None
-    // union-find whose root is always the component's minimum id — the
-    // label the loop converges to
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x: Long): Long = {
-      var root = x
-      while (parent.getOrElseUpdate(root, root) != root) root = parent(root)
-      var y = x
-      while (y != root) { val up = parent(y); parent(y) = root; y = up }
-      root
+    val cap = driverEdgeCap(pairs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold)
+    if (cap < 0 || fb.dataType != t || (t != LongType && t != IntegerType)) return None
+    edgeEnds(ids, cap).map { ends =>
+      // node ids sorted and distinct: a node's index is its id's rank, so
+      // a union-find whose roots are minimum indices labels every node
+      // with its component's minimum id — the label the loop converges to
+      val nodes = ends.clone()
+      java.util.Arrays.sort(nodes)
+      var m = 0
+      for (k <- nodes.indices) if (m == 0 || nodes(k) != nodes(m - 1)) { nodes(m) = nodes(k); m += 1 }
+      val parent = Array.range(0, m)
+      def find(x: Int): Int = {
+        var r = x
+        while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+        r
+      }
+      def index(id: Long): Int = java.util.Arrays.binarySearch(nodes, 0, m, id)
+      for (e <- ends.indices by 2) {
+        val ra = find(index(ends(e)))
+        val rb = find(index(ends(e + 1)))
+        if (ra != rb) parent(ra.max(rb)) = ra.min(rb)
+      }
+      val typed: Long => Any = if (t == IntegerType) _.toInt else identity
+      val rows = Array.tabulate(m)(k => Row(typed(nodes(k)), typed(nodes(find(k)))))
+      // the loop's columns are NULL-able exactly when either input id is
+      val nullable = fa.nullable || fb.nullable
+      pairs.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+        StructType(Seq(StructField("node", t, nullable),
+          StructField("cluster", t, nullable))))
     }
-    edges.foreach { r =>
-      val ra = find(r.getAs[Number](0).longValue)
-      val rb = find(r.getAs[Number](1).longValue)
-      if (ra != rb) parent(ra.max(rb)) = ra.min(rb)
-    }
-    val typed: Long => Any = if (t == IntegerType) _.toInt else identity
-    val rows = parent.keys.toArray.map(n => Row(typed(n), typed(find(n))))
-    // the loop's columns are NULL-able exactly when either input id is
-    val nullable = fa.nullable || fb.nullable
-    Some(pairs.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
-      StructType(Seq(StructField("node", t, nullable),
-        StructField("cluster", t, nullable)))))
+  }
+
+  /** Both ids of every edge of `ids` as one flat (a0, b0, a1, b1, …)
+    * array — None past `cap` edges or on a NULL id. The collected rows
+    * are garbage once this returns. */
+  private def edgeEnds(ids: DataFrame, cap: Int): Option[Array[Long]] = {
+    val rows = ids.limit(cap + 1).collect()
+    if (rows.length > cap || rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
+    else Some(Array.tabulate(2 * rows.length)(k => rows(k / 2).getAs[Number](k % 2).longValue))
   }
 
   /** [[connectedComponents]]' distributed path, by iterative min-label
@@ -475,47 +498,16 @@ object TextOps {
     * smallest label among itself and its neighbors) and converges after
     * O(component diameter) iterations — near-dup clusters are dense, so
     * diameters are tiny. The loop touches only nodes that appear in a
-    * pair; convergence is one count per iteration. Fails rather than
-    * return split components when `maxIters` is too few. */
+    * pair; convergence is one count per iteration. Its shuffles run at
+    * the session's `spark.sql.shuffle.partitions`, which it never writes.
+    * Fails rather than return split components when `maxIters` is too
+    * few. */
   private[graft] def componentsLoop(pairs: DataFrame, a: String, b: String,
                                     maxIters: Int): DataFrame = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val undirected = pairs.select(col(a).as("node"), col(b).as("peer"))
+    val edges = pairs.select(col(a).as("node"), col(b).as("peer"))
       .unionAll(pairs.select(col(b).as("node"), col(a).as("peer")))
       .persist(MEMORY_AND_DISK)
-    // BYTE-GATED loop shuffle width (r15, guide §2.2/§2.5; the write-side
-    // analogue of AQE coalescing, which cannot reach these shuffles:
-    // cached plans keep their partitioning unless
-    // canChangeCachedPlanOutputPartitioning is flipped session-wide).
-    // Every iteration's join/groupBy shuffle otherwise writes
-    // `spark.sql.shuffle.partitions` partition files per map task — at
-    // KB-scale frames that M×R file-open cost dominated the loop (r15
-    // profile: 70% of task samples in BypassMergeSortShuffleWriter /
-    // FileOutputStream.open, and 32-core runs measured 1.4× SLOWER than
-    // 8-core). The width is derived from the MEASURED cached size of the
-    // edge set against the session's advisory partition size — at real
-    // scale the estimate exceeds the session setting and this is a
-    // no-op; it can only narrow, never widen.
-    undirected.count() // materialize so the cache reports ACTUAL bytes
-    val sess = pairs.sparkSession
-    val loopParts: Option[Int] = try {
-      val bytes = undirected.queryExecution.optimizedPlan.stats.sizeInBytes
-      val advisory = sess.conf.get(
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")
-      val advisoryBytes = org.apache.spark.network.util.JavaUtils
-        .byteStringAsBytes(advisory)
-      val p = (bytes / advisoryBytes).toLong + 1
-      if (p < sess.conf.get("spark.sql.shuffle.partitions").toLong) Some(p.toInt) else None
-    } catch { case _: Exception => None }
-    // The width is plan-local: the loop's frames are planned in a private
-    // clone of the session that carries it, so every loop exchange is p
-    // wide and no query on the caller's session sees it. `repartition(p,
-    // …)` on the frames cannot do this: at p = 1 it plans SinglePartition,
-    // and sort-merge joins and post-checkpoint iterations then shuffle at
-    // the session width.
-    val edges = loopParts.fold(undirected)(p =>
-      org.apache.spark.sql.GraftShim.withSessionConf(
-        undirected, "spark.sql.shuffle.partitions", p.toString))
     var labels = edges.groupBy(col("node"))
       .agg(least(min(col("peer")), col("node")).as("label"))
       .persist(MEMORY_AND_DISK)
@@ -553,13 +545,10 @@ object TextOps {
     edges.unpersist()
     // eager localCheckpoint so the final labels can unpersist NOW — the
     // returned frame reads its own blocks (context-cleaner reclaimed when
-    // dropped), nothing lingers in the session cache, and it is re-rooted
-    // in the caller's session so later queries over it plan at the
-    // session's own width
+    // dropped) and nothing lingers in the session cache
     val out =
-      if (converged) Some(org.apache.spark.sql.GraftShim.ofRows(sess,
-        labels.select(col("node"), col("label").as("cluster"))
-          .localCheckpoint(true).queryExecution.analyzed))
+      if (converged)
+        Some(labels.select(col("node"), col("label").as("cluster")).localCheckpoint(true))
       else None
     // out's lineage is truncated by its own checkpoint, so the final
     // labels frame (a checkpoint itself on every-5th iterations — the

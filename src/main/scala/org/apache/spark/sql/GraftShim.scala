@@ -16,18 +16,6 @@ object GraftShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** `df`'s plan in a private clone of its session whose SQL conf also
-    * sets `key` = `value`. The clone shares the SparkContext, the cache
-    * and the catalogs, so frames derived from the result persist into
-    * the one session cache, but only their plans see the setting: the
-    * caller's session conf is never written. Re-root a result that
-    * outlives the operator with [[ofRows]]. */
-  def withSessionConf(df: DataFrame, key: String, value: String): DataFrame = {
-    val clone = df.sparkSession.asInstanceOf[classic.SparkSession].cloneSession()
-    clone.conf.set(key, value)
-    classic.Dataset.ofRows(clone, df.queryExecution.analyzed)
-  }
-
   /** Column ↔ catalyst Expression bridges (Spark 4 removed Column.expr). */
   def expression(c: Column): catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)

@@ -307,21 +307,25 @@ class ExtOpsSpec extends AnyFunSuite {
       .filter($"doc_id" =!= $"cluster_id").count() == 0)
   }
 
-  test("componentsLoop narrows its shuffle width in its own plans, never in the session") {
+  test("componentsLoop shuffles at the session's width and never writes the session conf") {
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import scala.jdk.CollectionConverters._
     val sessionWidth = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // shuffle widths of a plan, through AQE stages and (once each) the
-    // cached plans of the persisted frames it reads
+    // keyed shuffle widths of a plan, through AQE stages and (once each)
+    // the cached plans of the persisted frames it reads; a count's
+    // single-partition exchange has no width to choose
     def shuffleWidths(plan: SparkPlan, seen: java.util.Set[AnyRef]): Seq[Int] = plan match {
       case a: AdaptiveSparkPlanExec => shuffleWidths(a.executedPlan, seen)
       case q: QueryStageExec => shuffleWidths(q.plan, seen)
       case m: InMemoryTableScanExec =>
         if (seen.add(m.relation.cacheBuilder)) shuffleWidths(m.relation.cachedPlan, seen)
         else Nil
+      case x: ShuffleExchangeExec if x.outputPartitioning == SinglePartition =>
+        shuffleWidths(x.child, seen)
       case x: ShuffleExchangeExec =>
         x.outputPartitioning.numPartitions +: shuffleWidths(x.child, seen)
       case other => other.children.flatMap(shuffleWidths(_, seen))
@@ -331,35 +335,39 @@ class ExtOpsSpec extends AnyFunSuite {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = loopQueries.add(qe)
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    // a 40-node chain: ~40 iterations whose KB-sized frames measure a
-    // loop width of 1, while another thread keeps planning a groupBy on
-    // the same session
-    val chain = (0L until 39L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    // a 7-node chain: 6 iterations, one past the 5th-iteration
+    // checkpoint, while another thread keeps planning a groupBy on the
+    // same session
+    val chain = (0L until 6L).map(i => (i, i + 1)).toDF("a_id", "b_id")
     val observed = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val firstPlan = new java.util.concurrent.CountDownLatch(1)
     @volatile var done = false
     val observer = new Thread(() => while (!done) {
       val planned = spark.range(64).groupBy(col("id") % 8).count().queryExecution.executedPlan
       observed.addAll(shuffleWidths(planned, new java.util.HashSet[AnyRef]()).asJava)
+      firstPlan.countDown()
       Thread.sleep(5)
     })
     spark.listenerManager.register(listener)
     val comps = try {
       observer.start()
-      TextOps.componentsLoop(chain, "a_id", "b_id", maxIters = 60)
+      assert(firstPlan.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the observer planned nothing")
+      TextOps.componentsLoop(chain, "a_id", "b_id", maxIters = 10)
     } finally {
       done = true
       observer.join()
       spark.listenerManager.unregister(listener)
     }
-    assert(comps.as[(Long, Long)].collect().toMap == (0L to 39L).map(_ -> 0L).toMap)
+    assert(comps.as[(Long, Long)].collect().toMap == (0L to 6L).map(_ -> 0L).toMap)
     val observedWidths = observed.asScala.toSet
     assert(observedWidths == Set(sessionWidth),
       s"a concurrent groupBy planned widths $observedWidths, not $sessionWidth")
     org.apache.spark.sql.GraftShim.drainListenerBus(spark)
     val seen = new java.util.HashSet[AnyRef]()
     val loopWidths = loopQueries.asScala.toSeq.flatMap(qe => shuffleWidths(qe.executedPlan, seen))
-    assert(loopWidths.nonEmpty && loopWidths.toSet == Set(1),
-      s"the loop's exchanges should all be 1 wide, got widths ${loopWidths.toSet}")
+    assert(loopWidths.nonEmpty && loopWidths.toSet == Set(sessionWidth),
+      s"the loop's exchanges should all be $sessionWidth wide, got widths ${loopWidths.toSet}")
     assert(spark.conf.get("spark.sql.shuffle.partitions").toInt == sessionWidth)
   }
 

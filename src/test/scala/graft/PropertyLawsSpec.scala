@@ -62,10 +62,34 @@ class PropertyLawsSpec extends AnyFunSuite {
         .filter { case (a, b) => a != b }
       val expected = unionFind(edges)
       val clue = s"round $round: n=$n edges=${edges.size}"
-      assertPathsAgree(edges.toDF("a_id", "b_id"), expected, s"$clue, Long ids")
-      assertPathsAgree(edges.map { case (a, b) => (a.toInt, b.toInt) }.toDF("a_id", "b_id"),
+      // odd rounds Long ids, even rounds Int ids: one loop run per graph
+      if (round % 2 == 1) assertPathsAgree(edges.toDF("a_id", "b_id"), expected, s"$clue, Long ids")
+      else assertPathsAgree(edges.map { case (a, b) => (a.toInt, b.toInt) }.toDF("a_id", "b_id"),
         expected, s"$clue, Int ids")
     }
+  }
+
+  test("connectedComponents: the driver path's edge cap is the broadcast budget " +
+    "over the per-edge driver footprint") {
+    import ext.TextOps.{driverBytesPerEdge, driverEdgeCap}
+    assert(driverEdgeCap(-1L) == -1)
+    assert(driverEdgeCap(10L << 20) == 20480)
+    // a raised budget admits proportionally more edges, never 16 B each
+    assert(driverEdgeCap(100L << 20) == 204800)
+    assert(driverEdgeCap(Long.MaxValue) == Int.MaxValue - 1)
+    val four = Seq((1L, 2L), (2L, 3L), (7L, 8L), (8L, 3L)).toDF("a_id", "b_id")
+    def drivenAt(budget: Long, pairs: DataFrame): Boolean = {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", budget.toString)
+      try {
+        val out = ext.TextOps.connectedComponents(pairs, "a_id", "b_id")
+        assert(labels(out) == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 1L, 8L -> 1L))
+        out.queryExecution.analyzed.isInstanceOf[LocalRelation]
+      } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
+    assert(drivenAt(4 * driverBytesPerEdge, four), "4 edges fit a 4-edge budget")
+    assert(!drivenAt(4 * driverBytesPerEdge - 1, four), "4 edges exceed a 3-edge budget")
+    assert(!drivenAt(-1L, four), "a negative budget turns the driver path off")
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("connectedComponents: empty pair lists; a chain deeper than maxIters") {
