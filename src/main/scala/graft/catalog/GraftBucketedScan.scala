@@ -10,7 +10,7 @@ import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning,
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-import graft.table.GraftTable
+import graft.table.{GraftTable, LiveFile}
 
 /** DSv2 Batch scan for a bucket-partitioned graft table that REPORTS its
   * layout ([[SupportsReportPartitioning]] → [[KeyGroupedPartitioning]]),
@@ -28,7 +28,8 @@ import graft.table.GraftTable
   *    so both sides bind to the same canonical function;
   *  - rows are read by Spark's own parquet reader function
   *    ([[GraftShim.parquetFileReader]]): footer filter pushdown, column
-  *    pruning, and missing-physical-column-as-null schema evolution all
+  *    pruning, and schema evolution — missing physical columns and
+  *    columns a file's commit predates (`FieldInfo.since`) read NULL —
   *    behave exactly like [[GraftTable.dfAt]]'s read.
   *
   * Eligibility (checked by the caller): single bucket partition field, no
@@ -50,7 +51,6 @@ final class GraftBucketedScan(table: GraftTable,
     with SupportsReportStatistics {
 
   private val pf = snap.spec.head
-  private def spark = SparkSession.active
 
   override def readSchema(): StructType = required
 
@@ -119,25 +119,16 @@ final class GraftBucketedScan(table: GraftTable,
     }
   }
 
-  /** Leaf files grouped by bucket value across every data dir. Built once
-    * on the driver — O(partition dirs + files) filesystem metadata. */
+  /** Live files grouped by bucket value across every data dir; a file's
+    * bucket is its `__dir_<name>=v` parent dir. Built once on the driver
+    * from [[GraftTable.liveFiles]] — O(files) filesystem metadata. */
   private lazy val partitions: Array[GraftBucketPartition] = {
-    val fs = new Path(table.dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val prefix = s"__dir_${pf.name}="
-    val byBucket = scala.collection.mutable.Map.empty[Int, Vector[(String, Long)]]
-    snap.dataDirs.foreach { d =>
-      val root = new Path(s"${table.dir}/${d.path}")
-      fs.listStatus(root).filter(_.isDirectory).foreach { st =>
-        val n = st.getPath.getName
-        require(n.startsWith(prefix), s"unexpected layout under $root: $n")
-        val v = n.substring(prefix.length).toInt
-        val files = fs.listStatus(st.getPath)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map(f => (f.getPath.toString, f.getLen)).toVector
-        if (files.nonEmpty) byBucket(v) = byBucket.getOrElse(v, Vector.empty) ++ files
-      }
-    }
-    byBucket.toArray.sortBy(_._1)
+    table.liveFiles(snap.dataDirs).groupBy { f =>
+      val n = new Path(f.path).getParent.getName
+      require(n.startsWith(prefix), s"unexpected layout under ${table.dir}: ${f.path}")
+      n.substring(prefix.length).toInt
+    }.toArray.sortBy(_._1)
       .filter { case (v, _) => wantedBuckets.forall(_.contains(v)) }
       .map { case (v, files) => GraftBucketPartition(v, files.toArray) }
   }
@@ -155,7 +146,7 @@ final class GraftBucketedScan(table: GraftTable,
     * pruning (sizes come from the pruned partition list); row count is
     * reported only for unpruned scans (the log counts whole dirs). */
   override def estimateStatistics(): Statistics = {
-    val bytes = partitions.iterator.flatMap(_.files.iterator.map(_._2)).sum
+    val bytes = partitions.iterator.flatMap(_.files.iterator.map(_.bytes)).sum
     val rows: java.util.OptionalLong =
       if (wantedBuckets.isEmpty && snap.dataDirs.forall(_.rowCount >= 0))
         java.util.OptionalLong.of(snap.dataDirs.map(_.rowCount).sum)
@@ -173,25 +164,24 @@ final class GraftBucketedScan(table: GraftTable,
       extraPhysCols = Seq(StructField(pf.name, IntegerType, nullable = true)))
 }
 
-/** An input partition backed by a set of parquet files. */
+/** An input partition backed by a set of parquet files, each carrying
+  * its dir's commit version. */
 sealed trait GraftFilesPartition extends InputPartition {
-  def files: Array[(String, Long)]
+  def files: Array[LiveFile]
 }
 
 /** All files of one bucket value; the key makes Spark group and co-locate
   * matching buckets across the two join sides. */
-final case class GraftBucketPartition(bucket: Int, files: Array[(String, Long)])
+final case class GraftBucketPartition(bucket: Int, files: Array[LiveFile])
     extends GraftFilesPartition with HasPartitionKey {
   override def partitionKey(): InternalRow =
     new GenericInternalRow(Array[Any](bucket))
 }
 
-/** One plain file set; `dirVersion` is the commit version of the data
-  * dir the files belong to (equality deletes apply only to strictly
-  * older versions). */
-final case class GraftFilePartition(files: Array[(String, Long)],
-                                    dirVersion: Int = Int.MaxValue)
-    extends GraftFilesPartition
+/** One file, read on its own (the flat, micro-batch and changelog scans). */
+final case class GraftFilePartition(file: LiveFile) extends GraftFilesPartition {
+  override def files: Array[LiveFile] = Array(file)
+}
 
 /** Flat (non-partition-reporting) DSv2 Batch scan over a table's data
   * files — the read side of the row-level ReplaceData/WriteDelta paths,
@@ -228,12 +218,11 @@ final class GraftFlatBatchScan(table: GraftTable, required: StructType,
     with SupportsReportStatistics {
 
   private val snap = snap0.getOrElse(table.snapshot)
-  private def spark = SparkSession.active
 
-  // file partitions grouped by the data dir they belong to (the groups
+  // live files grouped by the data dir they belong to (the groups
   // runtime filtering keeps or drops); built once on the driver
-  private lazy val byDir: Seq[(graft.table.DataDir, Seq[InputPartition])] =
-    snap.dataDirs.map(d => d -> GraftBucketedScan.filePartitions(table.dir, d))
+  private lazy val byDir: Seq[(graft.table.DataDir, Seq[LiveFile])] =
+    snap.dataDirs.map(d => d -> table.liveFiles(Seq(d)))
 
   @volatile private var keptDirs: Option[Set[String]] = None
 
@@ -252,14 +241,11 @@ final class GraftFlatBatchScan(table: GraftTable, required: StructType,
     val fileSets = predicates.flatMap(GraftMetaCols.inFileSet)
     if (fileSets.nonEmpty) {
       val files = fileSets.reduce(_ intersect _)
-      val kept = byDir.filter { case (_, parts) =>
-        parts.exists {
-          case p: GraftFilesPartition => p.files.exists(f => files.contains(GraftMetaCols.norm(f._1)))
-          case _ => true // unknown partition shape: keep (sound)
-        }
+      val matched = byDir.filter { case (_, fs) =>
+        fs.exists(f => files.contains(GraftMetaCols.norm(f.path)))
       }.map(_._1.path).toSet
-      keptDirs = Some(kept)
-      groupFilter.foreach(_.set(Some(kept)))
+      keptDirs = Some(matched)
+      groupFilter.foreach(_.set(Some(matched)))
     }
   }
 
@@ -267,9 +253,10 @@ final class GraftFlatBatchScan(table: GraftTable, required: StructType,
   override def toBatch: Batch = this
   override def description(): String = s"GraftFlatBatchScan(${table.dir})"
 
+  private def kept = byDir.filter { case (d, _) => keptDirs.forall(_.contains(d.path)) }
+
   override def planInputPartitions(): Array[InputPartition] =
-    byDir.filter { case (d, _) => keptDirs.forall(_.contains(d.path)) }
-      .flatMap(_._2).toArray
+    kept.flatMap(_._2).map(f => GraftFilePartition(f): InputPartition).toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     GraftBucketedScan.deleteAware(table.dir, snap, required, pushed)
@@ -278,11 +265,7 @@ final class GraftFlatBatchScan(table: GraftTable, required: StructType,
     * row count from the log when every kept dir has one — pending
     * equality deletes make it an upper bound, so it is withheld then. */
   override def estimateStatistics(): Statistics = {
-    val kept = byDir.filter { case (d, _) => keptDirs.forall(_.contains(d.path)) }
-    val bytes = kept.iterator.flatMap(_._2.iterator).map {
-      case p: GraftFilesPartition => p.files.iterator.map(_._2).sum
-      case _ => 0L
-    }.sum
+    val bytes = kept.iterator.flatMap(_._2).map(_.bytes).sum
     val rows: java.util.OptionalLong =
       if (snap.deletes.isEmpty && kept.forall(_._1.rowCount >= 0))
         java.util.OptionalLong.of(kept.map(_._1.rowCount).sum)
@@ -296,7 +279,7 @@ final class GraftFlatBatchScan(table: GraftTable, required: StructType,
 
 /** Wraps the file reader with the (key → newest delete version) filter:
   * a row is dropped iff its key has a delete strictly newer than its
-  * dir's commit version (rows reinserted in the same commit survive —
+  * file's commit version (rows reinserted in the same commit survive —
   * sequence-number semantics). The map is either inlined (small delete
   * sets, driver-collected as before) or loaded lazily on the executor
   * from a scratch parquet of merged delete keys (large sets — no driver
@@ -307,10 +290,7 @@ private final class GraftDeleteFilteringReaderFactory(
     delsF: () => Map[Seq[Any], Int]) extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val dirV = partition match {
-      case p: GraftFilePartition => p.dirVersion
-      case _ => Int.MaxValue
-    }
+    val fileV = partition.asInstanceOf[GraftFilePartition].file.version
     val dels = delsF()
     val r = inner.createReader(partition)
     new PartitionReader[InternalRow] {
@@ -319,7 +299,7 @@ private final class GraftDeleteFilteringReaderFactory(
         while (r.next()) {
           val row = r.get()
           val k: Seq[Any] = (0 until keyIdx.length).map(i => row.get(keyIdx(i), keyTypes(i)))
-          if (!dels.get(k).exists(_ > dirV)) { cur = row; return true }
+          if (!dels.get(k).exists(_ > fileV)) { cur = row; return true }
         }
         false
       }
@@ -395,7 +375,9 @@ object GraftBucketedScan {
     * Requested `_file`/`_pos` metadata columns are not read from the
     * file: the reader stamps each row with the path it is reading and
     * its ordinal within the file (appended last, then projected into
-    * place when not trailing). */
+    * place when not trailing). A column whose `FieldInfo.since` is above
+    * a file's commit version reads NULL from that file, whatever the file
+    * holds (the same gate [[GraftTable.dfAt]] applies). */
   private[catalog] def readerFactory(snap: graft.table.Snapshot,
       required: StructType, pushed: Array[Filter],
       extraPhysCols: Seq[StructField] = Nil): GraftBucketReaderFactory = {
@@ -415,6 +397,12 @@ object GraftBucketedScan {
       StructField(snap.physicalOf(f.name), f.dataType, nullable = true)))
     val physData = StructType(snap.schema.fields.map(f =>
       StructField(snap.physicalOf(f.name), f.dataType, nullable = true)) ++ extraPhysCols)
+    // add-version of each output column (0 = never gated); a pushed filter
+    // on a column some live dir predates is dropped, or row-group skipping
+    // would judge the file's stale values instead of the NULLs it reads
+    val since = required.fields.map(f => snap.fields.find(_.logical == f.name).fold(0)(_.since))
+    val gated = snap.fields.filter(fi => snap.dataDirs.exists(_.version < fi.since))
+      .map(_.logical).toSet
     // `_pos` is stamped by COUNTING rows as they come off the file reader,
     // so the reader must emit every row in file order: with filters pushed
     // into parquet, row-group/page skipping drops rows BEFORE the counter
@@ -426,11 +414,12 @@ object GraftBucketedScan {
     val physFilters =
       if (stampsPos) Nil
       else pushed.flatMap(f => renamePushedFilter(f, n =>
-        snap.fields.find(_.logical == n).map(_.physical))).toSeq
+        snap.fields.find(fi => fi.logical == n && !gated(n)).map(_.physical))).toSeq
     new GraftBucketReaderFactory(
       GraftShim.parquetFileReader(spark, physData, physRequired, physFilters.toSeq),
       stamped = stamped,
-      outTypes = required.fields.map(_.dataType))
+      outTypes = required.fields.map(_.dataType),
+      since = since)
   }
 
   /** Builds a reader factory with reader-side equality-delete filtering
@@ -477,8 +466,6 @@ object GraftBucketedScan {
       else if (k == GraftMetaCols.FILE) StructField(k, StringType, nullable = false)
       else StructField(k, LongType, nullable = false)
     def physFor(k: String): String = if (isMetaKey(k)) k else snap.physicalOf(k)
-    val maxRows = spark.conf.getOption("graft.delete.broadcastMaxRows")
-      .map(_.toLong).getOrElse(1000000L)
     // widen the read schema with unselected delete-key columns (data OR
     // metadata); the filtered rows are projected back below
     val allKeys = groups.flatMap(_._1).distinct
@@ -494,7 +481,7 @@ object GraftBucketedScan {
         val keyIdx = delKeys.map(k =>
           widened.fieldNames.indexWhere(_.equalsIgnoreCase(k))).toArray
         val keyTypes = keyIdx.map(i => widened.fields(i).dataType)
-        val delsF = deleteKeyMap(tableDir, delFiles, physKeys, keyTypes, maxRows)
+        val delsF = deleteKeyMap(tableDir, delFiles, physKeys, keyTypes)
         new GraftDeleteFilteringReaderFactory(wrapped, keyIdx, keyTypes, delsF)
     }
     if (missing.isEmpty) chained
@@ -510,29 +497,30 @@ object GraftBucketedScan {
     * once per executor JVM ([[GraftScratchDeletes]]). */
   private[catalog] def deleteKeyMap(tableDir: String,
       delFiles: Seq[graft.table.DeleteFile], physKeys: Seq[String],
-      keyTypes: Array[DataType], maxRows: Long): () => Map[Seq[Any], Int] = {
+      keyTypes: Array[DataType]): () => Map[Seq[Any], Int] = {
     val spark = SparkSession.active
     import org.apache.spark.sql.functions.{col, max => fmax}
-    import graft.table.GraftTable.{globEscape, pathVersionCol}
+    import graft.table.GraftTable.{deleteBroadcastMaxRows, globEscape, pathVersionCol}
     // legacy delete files (rowCount -1) fall back to a footer-metadata
     // count — unknown size is a fallback, never an error
     val counts = delFiles.map(d =>
       if (d.rowCount >= 0) d.rowCount
       else spark.read.parquet(globEscape(s"$tableDir/${d.path}")).count())
-    // ONE relation over every delete file with the commit version derived
-    // from the row's file path (delete subpaths are UUIDs — unambiguous):
+    // ONE relation over every delete file with the commit version looked
+    // up from the row's dir under the table root (pathVersionCol):
     // the plan stays O(1) in pending-delete count instead of one parquet
     // relation per file (same single-relation shape as GraftTable.dfAt)
     val delSchema = StructType(physKeys.indices.map(i =>
       StructField(physKeys(i), keyTypes(i), nullable = true)))
-    // the shared when-chain fails loudly on an unmatched path: a NULL __v
+    // the shared lookup fails loudly on an unmatched path: a NULL __v
     // would NPE at the r.getInt below (or silently skew the max on the
     // scratch path)
-    val merged = spark.read.schema(delSchema)
+    val raw = spark.read.schema(delSchema)
       .parquet(delFiles.map(d => globEscape(s"$tableDir/${d.path}")): _*)
-      .withColumn("__v", pathVersionCol(delFiles.map(d => (d.path, d.version))))
+    val merged = raw
+      .withColumn("__v", pathVersionCol(raw, tableDir, delFiles.map(d => (d.path, d.version))))
       .groupBy(physKeys.map(col): _*).agg(fmax(col("__v")).as("__v"))
-    if (counts.sum <= maxRows) {
+    if (counts.sum <= deleteBroadcastMaxRows(spark)) {
       val conv = keyTypes.map(
         org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter)
       val dels: Map[Seq[Any], Int] = merged.collect().map { r =>
@@ -587,22 +575,6 @@ object GraftBucketedScan {
     }
   }
 
-  /** Recursive `.parquet` listing of one committed data dir, one
-    * InputPartition per file, stamped with the dir's commit version. */
-  private[catalog] def filePartitions(tableDir: String,
-      d: graft.table.DataDir): Seq[InputPartition] = {
-    val spark = SparkSession.active
-    val fs = new Path(tableDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(new Path(s"$tableDir/${d.path}"), true)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.getPath.getName.endsWith(".parquet"))
-        buf += GraftFilePartition(Array((st.getPath.toString, st.getLen)), d.version)
-    }
-    buf.toSeq
-  }
-
   /** Pushed filters re-addressed to in-file (physical) column names; a
     * filter on an unknown/renamed-away column is dropped (filters here
     * only skip row groups — Spark re-applies the full predicate). */
@@ -654,7 +626,10 @@ private[catalog] final class GraftBucketReaderFactory(
     // `_pos` columns. Rows are read without them; the values are appended
     // (in `stamped` order) and projected into place when not trailing.
     stamped: Seq[(String, Int)] = Nil,
-    outTypes: Array[org.apache.spark.sql.types.DataType] = Array.empty)
+    outTypes: Array[org.apache.spark.sql.types.DataType] = Array.empty,
+    // add-version per output ordinal: a file committed before it reads
+    // NULL there (0 = never gated)
+    since: Array[Int])
     extends PartitionReaderFactory {
 
   // stamping layout is fixed at factory construction — computed once here
@@ -668,8 +643,7 @@ private[catalog] final class GraftBucketReaderFactory(
     at == nData + rank
   }
   private val ordinals: Array[Int] =
-    if (identity) Array.empty
-    else (0 until outTypes.length).map { i =>
+    (0 until outTypes.length).map { i =>
       val rank = stamped.indexWhere(_._2 == i)
       if (rank >= 0) nData + rank
       else i - stamped.count(_._2 < i)
@@ -681,21 +655,25 @@ private[catalog] final class GraftBucketReaderFactory(
       // OPTION_RETURNING_BATCH=false in the reader build guarantees plain
       // row iterators (never ColumnarBatch disguised as InternalRow)
       private val it: Iterator[InternalRow] = p.files.iterator
-        .flatMap { case (path, len) =>
-          if (stamped.isEmpty) readFunc(path, len)
-          else {
-            val metaRow = new GenericInternalRow(stamped.length)
-            if (fileRank >= 0) metaRow.update(fileRank,
-              org.apache.spark.unsafe.types.UTF8String.fromString(path))
-            val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-            var pos = 0L
-            val base = readFunc(path, len).map { r =>
-              if (posRank >= 0) { metaRow.update(posRank, pos); pos += 1 }
-              joined(r, metaRow)
+        .flatMap { f =>
+          val base =
+            if (stamped.isEmpty) readFunc(f.path, f.bytes)
+            else {
+              val metaRow = new GenericInternalRow(stamped.length)
+              if (fileRank >= 0) metaRow.update(fileRank,
+                org.apache.spark.unsafe.types.UTF8String.fromString(f.path))
+              val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
+              var pos = 0L
+              readFunc(f.path, f.bytes).map { r =>
+                if (posRank >= 0) { metaRow.update(posRank, pos); pos += 1 }
+                joined(r, metaRow)
+              }
             }
-            if (identity) base
-            else base.map(new GraftReorderRow(ordinals, outTypes, _))
-          }
+          // -1: an ordinal this file's commit predates reads NULL
+          val map = ordinals.indices.map(i =>
+            if (since(i) > f.version) -1 else ordinals(i)).toArray
+          if (identity && !map.contains(-1)) base
+          else base.map(new GraftReorderRow(map, outTypes, _))
         }
       private var cur: InternalRow = _
       override def next(): Boolean = { val has = it.hasNext; if (has) cur = it.next(); has }
@@ -706,14 +684,14 @@ private[catalog] final class GraftBucketReaderFactory(
 }
 
 /** Ordinal-remapping InternalRow view (out ordinal i reads inner ordinal
-  * `map(i)`) — no per-row copying. */
+  * `map(i)`; -1 reads NULL) — no per-row copying. */
 private[catalog] final class GraftReorderRow(
     map: Array[Int], types: Array[org.apache.spark.sql.types.DataType],
     inner: InternalRow) extends InternalRow {
   import org.apache.spark.sql.types.{DataType, Decimal}
   import org.apache.spark.unsafe.types.{CalendarInterval, UTF8String, VariantVal}
   override def numFields: Int = map.length
-  override def isNullAt(i: Int): Boolean = inner.isNullAt(map(i))
+  override def isNullAt(i: Int): Boolean = map(i) < 0 || inner.isNullAt(map(i))
   override def getBoolean(i: Int): Boolean = inner.getBoolean(map(i))
   override def getByte(i: Int): Byte = inner.getByte(map(i))
   override def getShort(i: Int): Short = inner.getShort(map(i))
@@ -733,7 +711,7 @@ private[catalog] final class GraftReorderRow(
   override def getStruct(i: Int, n: Int): InternalRow = inner.getStruct(map(i), n)
   override def getArray(i: Int): org.apache.spark.sql.catalyst.util.ArrayData = inner.getArray(map(i))
   override def getMap(i: Int): org.apache.spark.sql.catalyst.util.MapData = inner.getMap(map(i))
-  override def get(i: Int, dt: DataType): AnyRef = inner.get(map(i), dt)
+  override def get(i: Int, dt: DataType): AnyRef = if (map(i) < 0) null else inner.get(map(i), dt)
   override def setNullAt(i: Int): Unit = throw new UnsupportedOperationException
   override def update(i: Int, v: Any): Unit = throw new UnsupportedOperationException
   override def copy(): InternalRow = {
@@ -741,7 +719,7 @@ private[catalog] final class GraftReorderRow(
     var i = 0
     while (i < map.length) {
       vals(i) =
-        if (inner.isNullAt(map(i))) null
+        if (isNullAt(i)) null
         else InternalRow.copyValue(inner.get(map(i), types(i)))
       i += 1
     }

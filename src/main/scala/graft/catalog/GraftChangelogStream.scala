@@ -124,19 +124,19 @@ final class GraftChangelogMicroBatchStream(table: GraftTable, pinned: Snapshot,
         else (sv.dataDirs.filter(_.version == v), sv.deletes.filter(_.version == v))
       }
 
-    // INSERTS: each data dir committed in range, read RAW (rows deleted
-    // by a later commit still insert first — the CDC ordering), stamped
-    // with its own commit version
-    byVersion.flatMap(_._1).foreach { d =>
+    // INSERTS: every data dir committed in range, read RAW (rows deleted
+    // by a later commit still insert first — the CDC ordering) by ONE
+    // reader, each row stamped with its file's commit version
+    val insFiles = table.liveFiles(byVersion.flatMap(_._1))
+    if (insFiles.nonEmpty) {
       val inner = GraftBucketedScan.readerFactory(pinned, dataSchema,
         Array.empty[org.apache.spark.sql.sources.Filter])
       val fid = factories.length
       factories += new GraftChangeStampFactory(inner,
         srcIdx = dataSchema.indices.toArray,
         srcTypes = dataSchema.fields.map(_.dataType),
-        insert = true, version = d.version)
-      GraftBucketedScan.filePartitions(table.dir, d)
-        .foreach(p => parts += GraftChangelogPartition(p, fid))
+        insert = true, version = None)
+      insFiles.foreach(f => parts += GraftChangelogPartition(GraftFilePartition(f), fid))
     }
 
     // DELETES: each delete file committed in range plans the PARENT
@@ -184,10 +184,7 @@ final class GraftChangelogMicroBatchStream(table: GraftTable, pinned: Snapshot,
       val keyTypes = keyIdx.map(i => scanned.fields(i).dataType)
       val physKeys = d.keys.map(k =>
         if (positional) k else pinned.physicalOf(k))
-      val maxRows = spark.conf.getOption("graft.delete.broadcastMaxRows")
-        .map(_.toLong).getOrElse(1000000L)
-      val keysF = GraftBucketedScan.deleteKeyMap(
-        table.dir, Seq(d), physKeys, keyTypes, maxRows)
+      val keysF = GraftBucketedScan.deleteKeyMap(table.dir, Seq(d), physKeys, keyTypes)
       val kept = new GraftKeepKeysReaderFactory(live, keyIdx, keyTypes, keysF)
       // project back to the pinned column order (added-later → NULL)
       val srcIdx = aligned.map {
@@ -197,7 +194,7 @@ final class GraftChangelogMicroBatchStream(table: GraftTable, pinned: Snapshot,
       val fid = factories.length
       factories += new GraftChangeStampFactory(kept, srcIdx,
         srcTypes = dataSchema.fields.map(_.dataType),
-        insert = false, version = d.version)
+        insert = false, version = Some(d.version))
       preImagePartitions(parent, d, keyField(d.keys.head).name)
         .foreach(p => parts += GraftChangelogPartition(p, fid))
     }
@@ -229,23 +226,19 @@ final class GraftChangelogMicroBatchStream(table: GraftTable, pinned: Snapshot,
   private def preImagePartitions(parent: Snapshot, d: graft.table.DeleteFile,
                                  parentKeyName: String): Seq[InputPartition] = {
     import org.apache.spark.sql.functions.{col, lit, max => fmax, min => fmin}
-    def all: Seq[InputPartition] =
-      parent.dataDirs.flatMap(dd => GraftBucketedScan.filePartitions(table.dir, dd))
-    val maxRows = spark.conf.getOption("graft.delete.broadcastMaxRows")
-      .map(_.toLong).getOrElse(1000000L)
+    def partitions(dirs: Seq[graft.table.DataDir]): Seq[InputPartition] =
+      table.liveFiles(dirs).map(f => GraftFilePartition(f))
+    def all: Seq[InputPartition] = partitions(parent.dataDirs)
     val deletePath = GraftTable.globEscape(s"${table.dir}/${d.path}")
     try {
       if (d.keys == GraftTable.PosDeleteKeys) {
-        if (d.rowCount < 0 || d.rowCount > maxRows) return all
+        if (d.rowCount < 0 || d.rowCount > GraftTable.deleteBroadcastMaxRows(spark)) return all
         val victims: Set[String] = spark.read.parquet(deletePath)
           .select(col(GraftMetaCols.FILE)).distinct()
           .collect().map(_.getString(0)).toSet
         if (victims.contains(null)) return all
-        parent.dataDirs.flatMap(dd =>
-          GraftBucketedScan.filePartitions(table.dir, dd).filter {
-            case p: GraftFilePartition => p.files.exists(f => victims.contains(f._1))
-            case _ => true
-          })
+        table.liveFiles(parent.dataDirs).filter(f => victims.contains(f.path))
+          .map(f => GraftFilePartition(f))
       } else {
         // only pay the key-stats job when a sidecar can actually prune
         val prunable = parent.statsKeys.exists(_.equalsIgnoreCase(parentKeyName)) ||
@@ -264,8 +257,7 @@ final class GraftChangelogMicroBatchStream(table: GraftTable, pinned: Snapshot,
             if (r.isNullAt(0) || r.isNullAt(1)) return all
             col(parentKeyName) >= lit(r.get(0)) && col(parentKeyName) <= lit(r.get(1))
           }
-        table.dirsPossiblyMatching(parent, pred)
-          .flatMap(dd => GraftBucketedScan.filePartitions(table.dir, dd))
+        partitions(table.dirsPossiblyMatching(parent, pred))
       }
     } catch { case scala.util.control.NonFatal(_) => all }
   }
@@ -280,8 +272,9 @@ final case class GraftChangelogPartition(inner: InputPartition, factoryId: Int)
     extends InputPartition
 
 /** Routes each changelog partition to its commit group's reader chain —
-  * UNWRAPPING first, so the inner delete-filter wrappers still see the
-  * `GraftFilePartition` dir version their guards key on. */
+  * UNWRAPPING first, so the inner readers see the `GraftFilePartition`
+  * whose [[graft.table.LiveFile]] version their `since` gate, delete
+  * guards and insert stamp key on. */
 private[catalog] final class GraftChangeDispatchFactory(
     factories: Array[PartitionReaderFactory]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
@@ -321,14 +314,16 @@ private[catalog] final class GraftKeepKeysReaderFactory(
 
 /** Projects inner rows to the pinned column order (srcIdx, −1 → NULL)
   * and appends the two changelog metadata columns: `_change_type`
-  * ('insert' | 'delete') and `_commit_version`. */
+  * ('insert' | 'delete') and `_commit_version` — `version`, or when None
+  * the commit version of the partition's file. */
 private[catalog] final class GraftChangeStampFactory(
     inner: PartitionReaderFactory, srcIdx: Array[Int],
-    srcTypes: Array[DataType], insert: Boolean, version: Int)
+    srcTypes: Array[DataType], insert: Boolean, version: Option[Int])
     extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val r = inner.createReader(partition)
+    val v = version.getOrElse(partition.asInstanceOf[GraftFilePartition].file.version)
     val tag = UTF8String.fromString(if (insert) "insert" else "delete")
     new PartitionReader[InternalRow] {
       private val out = new GenericInternalRow(srcIdx.length + 2)
@@ -343,7 +338,7 @@ private[catalog] final class GraftChangeStampFactory(
           i += 1
         }
         out.update(srcIdx.length, tag)
-        out.update(srcIdx.length + 1, version)
+        out.update(srcIdx.length + 1, v)
         out
       }
       override def close(): Unit = r.close()

@@ -1,11 +1,9 @@
 package graft.catalog
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.StructType
 import graft.table.GraftTable
 
 /** Snapshot-version offset of the streaming read (serialized into the
@@ -45,8 +43,6 @@ final class GraftMicroBatchStream(table: GraftTable, required: StructType,
   // the stream silently stalls delivering nothing — fail at construction
   require(maxVersionsPerBatch.forall(_ > 0),
     s"maxVersionsPerBatch must be positive (got ${maxVersionsPerBatch.get})")
-
-  private def spark: SparkSession = SparkSession.active
 
   // Trigger.AvailableNow: pin the end of the run at prepare time — the
   // query drains (in rate-limited steps) to exactly this version, then
@@ -109,8 +105,8 @@ final class GraftMicroBatchStream(table: GraftTable, required: StructType,
             "or retracts rows (not representable as appends); restart the " +
             "stream or set skipReplaceCommits=true")
       }
-    endSnap.dataDirs.filter(d => d.version > from && d.version <= to)
-      .flatMap(d => GraftBucketedScan.filePartitions(table.dir, d)).toArray
+    table.liveFiles(endSnap.dataDirs.filter(d => d.version > from && d.version <= to))
+      .map(f => GraftFilePartition(f)).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {

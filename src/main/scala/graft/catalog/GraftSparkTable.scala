@@ -390,12 +390,10 @@ private[catalog] final class GraftScanBuilder(table: GraftTable,
         new BaseRelation with TableScan {
           override def sqlContext: SQLContext = context
           override def schema: StructType = readSchema()
-          // real file sizes (metadata-only listing) instead of the
-          // never-broadcast default — small graft dims broadcast in joins
-          override def sizeInBytes: Long = {
-            val s = pinned.map(t.snapshotAt).getOrElse(t.snapshot)
-            t.dataSizeBytes(s) max 1L
-          }
+          // real file sizes (metadata-only listing) of the snapshot the
+          // routing read instead of the never-broadcast default — small
+          // graft dims broadcast in joins
+          override def sizeInBytes: Long = t.dataSizeBytes(routeSnap) max 1L
           override def buildScan(): RDD[Row] = {
             // (a metadata `_file` request never reaches this V1 path —
             // build() routes it to the flat Batch scan above)

@@ -285,7 +285,7 @@ class CdcStreamSpec extends AnyFunSuite {
     val stream = new graft.catalog.GraftChangelogMicroBatchStream(t, t.snapshot, 0, None)
     val parts = stream.planInputPartitions(GraftOffset(3), GraftOffset(4))
       .collect { case GraftChangelogPartition(p: graft.catalog.GraftFilePartition, fid) =>
-        (fid, p.files.map(_._1).toSeq) }
+        (fid, p.files.map(_.path).toSeq) }
     // factory 0 = v4's insert dir; factory 1 = the delete's pre-image scan
     val preFiles = parts.filter(_._1 == 1).flatMap(_._2)
     assert(preFiles.nonEmpty, "the delete must plan pre-image partitions")
@@ -304,7 +304,7 @@ class CdcStreamSpec extends AnyFunSuite {
     val pStream = new graft.catalog.GraftChangelogMicroBatchStream(p, p.snapshot, 0, None)
     val pParts = pStream.planInputPartitions(GraftOffset(2), GraftOffset(3))
       .collect { case GraftChangelogPartition(fp: graft.catalog.GraftFilePartition, fid) =>
-        (fid, fp.files.map(_._1).toSeq) }
+        (fid, fp.files.map(_.path).toSeq) }
     val pPre = pParts.filter(_._1 == 0).flatMap(_._2) // v3 commits no data dir: factory 0 is the delete
     assert(pPre.nonEmpty && !pPre.exists(_.contains(pDirA)),
       "positional pre-image scan must plan only the victim files")

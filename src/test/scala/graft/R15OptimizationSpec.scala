@@ -152,18 +152,27 @@ class R15OptimizationSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("pathVersionCol fails loudly when input_file_name is empty (interposed cache)") {
-    val vcol = GraftTable.pathVersionCol(Seq(("data/no-such-dir", 7)))
-    // a cached (non-file) relation evaluates input_file_name() to "" —
-    // exactly the refactor hazard VERDICT r14 item 3 names. The guard
-    // must THROW, never yield a NULL version that un-guards the delete
-    // anti-join.
+    def loud(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .exists(x => Option(x.getMessage).exists(_.contains("cannot derive commit version")))
+    // a parquet file under a dir the log does not name: the lookup misses
+    // and must THROW, never yield a NULL version that un-guards the
+    // delete anti-join
+    val root = TestSpark.tmpDir("pvc-unlogged")
+    spark.range(3).toDF("id").write.parquet(s"$root/data/in")
+    val files = spark.read.parquet(s"$root/data/in")
+    val e1 = intercept[Exception] {
+      files.withColumn("cv", GraftTable.pathVersionCol(files, root, Seq(("data/no-such-dir", 7)))).collect()
+    }
+    assert(loud(e1), s"expected the loud version-derivation error, got: $e1")
+    // a cached (non-file) relation has no file path at all — exactly the
+    // refactor hazard VERDICT r14 item 3 names
     val cached = spark.range(3).toDF("id").cache()
     cached.count()
-    val e = intercept[Exception] { cached.withColumn("cv", vcol).collect() }
-    assert(e.getMessage != null &&
-      (e.getMessage.contains("cannot derive commit version") ||
-        Option(e.getCause).exists(_.getMessage.contains("cannot derive commit version"))),
-      s"expected the loud version-derivation error, got: $e")
+    val e2 = intercept[Exception] {
+      cached.withColumn("cv", GraftTable.pathVersionCol(cached, root, Seq(("data/no-such-dir", 7)))).collect()
+    }
+    assert(loud(e2), s"expected the loud version-derivation error, got: $e2")
     cached.unpersist()
   }
 

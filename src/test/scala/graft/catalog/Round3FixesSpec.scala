@@ -54,7 +54,7 @@ class Round3FixesSpec extends AnyFunSuite {
     val snap = t.snapshot
     val required = StructType(Seq(StructField("v", StringType)))
     val rf = GraftBucketedScan.deleteAware(dir, snap, required, Array.empty)
-    val parts = snap.dataDirs.flatMap(d => GraftBucketedScan.filePartitions(dir, d))
+    val parts = t.liveFiles(snap.dataDirs).map(f => GraftFilePartition(f))
     val rows = readAll(rf, parts)
     assert(rows.forall(_.numFields == 1), "widened key column must not leak out")
     assert(rows.map(_.getUTF8String(0).toString).sorted == Seq("a", "b2"))
@@ -67,7 +67,7 @@ class Round3FixesSpec extends AnyFunSuite {
     val legacy = snap.copy(deletes = snap.deletes.map(_.copy(rowCount = -1L)))
     val required = StructType(Seq(StructField("id", LongType), StructField("v", StringType)))
     val rf = GraftBucketedScan.deleteAware(dir, legacy, required, Array.empty)
-    val rows = readAll(rf, legacy.dataDirs.flatMap(d => GraftBucketedScan.filePartitions(dir, d)))
+    val rows = readAll(rf, t.liveFiles(legacy.dataDirs).map(f => GraftFilePartition(f)))
       .map(r => (r.getLong(0), r.getUTF8String(1).toString)).sortBy(_._1)
     assert(rows == Seq((1L, "a"), (2L, "b2")))
     // over-threshold delete sets no longer hard-fail ("compact() first"):
@@ -77,7 +77,7 @@ class Round3FixesSpec extends AnyFunSuite {
     spark.conf.set("graft.delete.broadcastMaxRows", "0")
     try {
       val rf2 = GraftBucketedScan.deleteAware(dir, legacy, required, Array.empty)
-      val rows2 = readAll(rf2, legacy.dataDirs.flatMap(d => GraftBucketedScan.filePartitions(dir, d)))
+      val rows2 = readAll(rf2, t.liveFiles(legacy.dataDirs).map(f => GraftFilePartition(f)))
         .map(r => (r.getLong(0), r.getUTF8String(1).toString)).sortBy(_._1)
       assert(rows2 == Seq((1L, "a"), (2L, "b2")))
       assert(new java.io.File(s"$dir/_graft_log/scratch").isDirectory,

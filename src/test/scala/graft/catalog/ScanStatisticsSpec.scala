@@ -103,4 +103,22 @@ class ScanStatisticsSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"expected a broadcast join against the small dim, got:\n$phys")
     assert(joined.count() == 10000L)
   }
+
+  test("V1 fallback size comes from the snapshot build() pinned, not a later one") {
+    import org.apache.spark.sql.connector.read.{Scan, V1Scan}
+    import org.apache.spark.sql.sources.{BaseRelation, TableScan}
+    def sizeOf(scan: Scan): Long = scan.asInstanceOf[V1Scan]
+      .toV1TableScan[BaseRelation with TableScan](spark.sqlContext).sizeInBytes
+    val t = GraftTable.create(spark, tmp("v1size"),
+      StructType(Seq(StructField("k", LongType), StructField("v", StringType))))
+    t.append((1L to 50L).map(i => (i, s"v$i")).toDF("k", "v"))             // v1
+    val atBuild = t.dataSizeBytes(t.snapshot)
+    val built = new GraftScanBuilder(t).build()
+    t.append((51L to 100L).map(i => (i, s"v$i")).toDF("k", "v"))           // v2
+    assert(t.dataSizeBytes(t.snapshot) > atBuild)
+    assert(sizeOf(built) == atBuild, "size read a snapshot newer than the routed one")
+    // a versionAsOf read made after the later append sizes its own version
+    assert(sizeOf(new GraftScanBuilder(t, asOf = Some(1)).build()) == atBuild)
+    assert(sizeOf(new GraftScanBuilder(t).build()) == t.dataSizeBytes(t.snapshot))
+  }
 }
