@@ -201,7 +201,7 @@ final case class Snapshot(
   *
   * Layout:
   * {{{
-  *   <dir>/_graft_log/v00000.json ...   write-once snapshots (CREATE_NEW)
+  *   <dir>/_graft_log/v00000.json ...   snapshots, each published once ([[LogStore]])
   *   <dir>/data/<uuid>/[k=v/]part-*.parquet   data commits
   *   <dir>/deletes/<uuid>/part-*.parquet      equality-delete key files
   * }}}
@@ -219,120 +219,25 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
 
   private def fs: FileSystem = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Atomic replace of `dst` with fully-written `tmp`. FileSystem.rename
-    * cannot overwrite, so the naive delete-then-rename leaves a crash
-    * window where `dst` is MISSING (a vanished log entry or ref);
-    * FileContext.rename(OVERWRITE) replaces in one step on every Hadoop
-    * filesystem that supports it, falling back to delete+rename only
-    * where it does not. A filesystem with NO AbstractFileSystem binding
-    * (getFileContext throws UnsupportedFileSystemException, an
-    * IOException) must also fall through — the crash window is better
-    * than setRef/expireSnapshots hard-failing on such stores.
-    *
-    * The FileContext binding may be a raw (checksum-free) filesystem
-    * under a checksummed `FileSystem` (`GraftLocalFileSystem.sessionConfs`
-    * pairs them that way): its rename leaves `dst`'s `.crc` sibling
-    * describing the OLD bytes, and every later checksummed read of `dst`
-    * fails. So a stale `dst` checksum is dropped first and a `tmp`
-    * checksum the rename left behind afterwards; `dst` then reads
-    * unverified, like every write-once log entry. */
-  private def replaceAtomic(tmp: Path, dst: Path): Unit = {
-    val f = fs
-    def dropCrc(p: Path): Unit = f match {
-      case c: org.apache.hadoop.fs.ChecksumFileSystem =>
-        c.getRawFileSystem.delete(c.getChecksumFile(p), false)
-      case _ =>
-    }
-    dropCrc(dst)
-    try {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        dst.toUri, spark.sparkContext.hadoopConfiguration)
-      fc.rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    } catch {
-      case _: UnsupportedOperationException
-           | _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        f.delete(dst, false); f.rename(tmp, dst)
-    }
-    dropCrc(tmp)
-  }
+  /** The table's `_graft_log`: every log read, probe and write. */
+  private val log = LogStore(spark, dir)
 
-  // ---- log access ------------------------------------------------------
-  private def logDir = new Path(dir, "_graft_log")
-
-  /** Latest committed version. Normally O(1): a best-effort `_head` hint
-    * (rewritten after every commit) names a known-committed version and
-    * the tail is found by probing forward slot-by-slot — write-once
-    * slots are never removed, so `exists(v+1)` is exact. Per-epoch
-    * streaming commits make table loads hot; a full directory listing
-    * of an O(100k)-snapshot log on every load would dominate. A
-    * missing/corrupt/ahead-of-reality hint falls back to the listing. */
-  def currentVersion: Int = {
-    val f = fs
-    def slot(v: Int) = new Path(logDir, f"v$v%05d.json")
-    val hint =
-      try {
-        val in = f.open(new Path(logDir, "_head"))
-        val s = try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
-        s.toInt
-      } catch { case _: Exception => -1 }
-    if (hint >= 0 && f.exists(slot(hint))) {
-      var v = hint
-      while (f.exists(slot(v + 1))) v += 1
-      v
-    } else {
-      val st = f.listStatus(logDir)
-      st.map(_.getPath.getName).filter(_.matches("v\\d+\\.json"))
-        .map(n => n.substring(1, n.length - 5).toInt).max
-    }
-  }
-
-  /** Best-effort head hint; readers validate by probing, so a torn or
-    * stale write is harmless and errors are swallowed. */
-  private def writeHead(v: Int): Unit =
-    try {
-      val os = fs.create(new Path(logDir, "_head"), true)
-      try os.write(v.toString.getBytes("UTF-8")) finally os.close()
-    } catch { case _: Exception => }
+  /** Latest committed version (see [[LogStore.latest]]). */
+  def currentVersion: Int = log.latest
 
   def snapshot: Snapshot = snapshotAt(currentVersion)
 
-  def snapshotAt(v: Int): Snapshot = {
-    val p = new Path(logDir, f"v$v%05d.json")
-    // The commit protocol claims a slot atomically with create-new, then
-    // streams the JSON in: a reader racing the writer can observe an
-    // empty/truncated file for a moment. The claim guarantees content is
-    // coming — retry briefly before declaring the entry corrupt.
-    var attempt = 0
-    while (true) {
-      val in = fs.open(p)
-      val bytes = try {
-        val out = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-        out.toByteArray
-      } finally in.close()
-      try return readSnapshot(new String(bytes, "UTF-8"))
-      catch {
-        case e: Exception =>
-          attempt += 1
-          if (attempt >= 100) throw new IllegalStateException(
-            s"unreadable snapshot entry $p after $attempt attempts", e)
-          Thread.sleep(20)
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+  def snapshotAt(v: Int): Snapshot = log.entry(v)
 
   def allSnapshots: Seq[Snapshot] = (0 to currentVersion).map(snapshotAt)
 
-  /** Optimistic-concurrency commit: write-once `v{N}.json`; on collision
-    * (a concurrent writer took the slot) the delta is RE-APPLIED against
+  /** Optimistic-concurrency commit: publish `v{N}.json`; when the slot is
+    * taken (a concurrent writer won it) the delta is RE-APPLIED against
     * the freshly-read current snapshot — re-stamping the stale pre-read
     * base would silently drop the other writer's committed changes (lost
     * update). Structural conflicts (e.g. both writers adding the same
     * column) surface as the delta's own validation errors against the
-    * new base. Atomicity = file create-new. */
+    * new base. Atomicity = [[LogStore.publish]]. */
   private def commit(startAt: Int)(mk: (Snapshot, Int) => Snapshot): Snapshot = {
     var base: Snapshot = null // first attempt uses the caller's pre-read state
     var v = startAt
@@ -344,9 +249,8 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
       // time is the time the slot was actually won
       out = mk(if (base == null) null else base, v).copy(
         commitTimeMs = System.currentTimeMillis())
-      val p = new Path(logDir, f"v$v%05d.json")
-      if (writeOnce(p, writeSnapshot(out).getBytes("UTF-8"))) {
-        writeHead(v)
+      if (log.publishEntry(v, out)) {
+        log.writeHead(v)
         done = true
       } else {
         // next slot comes from the log's FILE numbering — a snapshot
@@ -359,32 +263,6 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
       }
     }
     out
-  }
-
-  /** Atomic write-once claim of `p` with `content`; false if another
-    * writer holds the slot. Hadoop's `create(p, overwrite=false)` is
-    * namenode-atomic on HDFS but CHECK-THEN-ACT on the local filesystem
-    * (two racing creators can both pass the exists check and the second
-    * silently truncates the first — a lost commit). On `file:` schemes
-    * the claim therefore goes through `File.createNewFile()` (O_EXCL,
-    * kernel-atomic); content streams in right after, and readers tolerate
-    * the brief empty-file window (see [[snapshotAt]]'s retry). */
-  private def writeOnce(p: Path, content: Array[Byte]): Boolean = {
-    val f = fs
-    if ("file".equalsIgnoreCase(f.getUri.getScheme)) {
-      val jf = new java.io.File(p.toUri.getPath)
-      jf.getParentFile.mkdirs()
-      if (!jf.createNewFile()) return false
-      val os = new java.io.FileOutputStream(jf)
-      try os.write(content) finally os.close()
-      true
-    } else {
-      try {
-        val os = f.create(p, false) // atomic create-new (namenode)
-        try os.write(content) finally os.close()
-        true
-      } catch { case _: java.io.IOException if f.exists(p) => false }
-    }
   }
 
   // ---- schema / spec accessors ----------------------------------------
@@ -516,10 +394,10 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
       // columns also record their (wrapping) per-dir sum — Long addition
       // is associative mod 2^64, so folding per-dir partials reproduces
       // Spark's own sum(col) result bit-for-bit, overflow included
-      val base = Seq(min(col(p)).as(s"__min_$p"), max(col(p)).as(s"__max_$p"),
-        count(col(p)).as(s"__nn_$p"))
+      val base = Seq(min(col(p)).as(s"__mn_$p"), max(col(p)).as(s"__mx_$p"),
+        count(col(p)).as(s"__cn_$p"))
       if (GraftTable.integralType(snap.schema(k).dataType))
-        base :+ sum(col(p)).as(s"__sum_$p")
+        base :+ sum(col(p)).as(s"__sm_$p")
       else base
     }
     val observed =
@@ -545,86 +423,20 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
       // later metadata query, not repeated per query. Best-effort like
       // the bloom/bounds sidecars: a missing file only means the
       // metadata query falls back to its footer walk for this dir.
-      try {
-        val leaves = partitionLeaves(
-          fs.makeQualified(new Path(s"$dir/$sub")), partCols.size)
-        val stats = org.apache.spark.sql.GraftShim.footerStats(spark, leaves)
-        val o = mapper.createObjectNode()
-        stats.foreach { case (disp, nf, nr, nb) =>
-          val c = o.putObject(disp); c.put("f", nf); c.put("r", nr); c.put("b", nb)
-        }
-        val uuid = sub.substring(sub.lastIndexOf('/') + 1)
-        val os = fs.create(new Path(logDir, s"pstats/$uuid.json"), true)
-        try os.write(mapper.writeValueAsBytes(o)) finally os.close()
-        pstatsRows = Some(stats.map(_._3).sum)
-      } catch { case _: Exception => } // sidecars are best-effort
-      // per-leaf per-column stats sidecar (pcolstats/<uuid>.json):
-      // {"by": [partition field names], "leaves": [{"v": [values],
-      // "r": rows, "c": {"<phys>": {"min","max","nn"}}}]} — captured by
-      // ONE aggregation job over the just-written (page-hot) files
-      // reading ONLY the partition + stats columns. Partition-scoped
+      try pstatsRows = publishPstats(sub, partCols.size)
+      catch { case _: Exception => } // sidecars are best-effort
+      // per-leaf per-column stats sidecar (pcolstats/<uuid>.json),
+      // captured by ONE aggregation job over the just-written (page-hot)
+      // files reading ONLY the partition + stats columns. Partition-scoped
       // stats folds (`SELECT day, min(ts), count(v) … GROUP BY day`)
       // then answer from O(leaves) metadata, the role Iceberg's
       // per-file manifest column bounds play at 100 TB. Write-time
       // cost, amortized over every later fold; best-effort like every
       // sidecar — absence only means those queries scan.
-      if (snap.statsKeys.nonEmpty) {
-        try {
-          val physKeys = snap.statsKeys.map(snap.physicalOf).distinct
-          val intPhys = snap.statsKeys
-            .filter(k => GraftTable.integralType(snap.schema(k).dataType))
-            .map(snap.physicalOf).distinct
-          val back = spark.read.parquet(readPaths(Seq(sub)): _*)
-            .select((partCols ++ physKeys).distinct.map(col): _*)
-          val aggs = (count(lit(1)).as("__r") +: physKeys.flatMap { p =>
-            Seq(min(col(p)).as(s"__mn_$p"), max(col(p)).as(s"__mx_$p"),
-              count(col(p)).as(s"__cn_$p"))
-          }) ++ intPhys.map(p => sum(col(p)).as(s"__sm_$p"))
-          val leafRows = back.groupBy(partCols.map(col): _*)
-            .agg(aggs.head, aggs.tail: _*).collect()
-          val o = mapper.createObjectNode()
-          val by = o.putArray("by"); partCols.foreach(by.add)
-          val arr = o.putArray("leaves")
-          var ok = true
-          leafRows.foreach { r =>
-            val e = mapper.createObjectNode()
-            val vs = e.putArray("v")
-            partCols.indices.foreach { i =>
-              r.get(i) match {
-                case null => vs.addNull()
-                case v => encodeStat(v) match {
-                  case Some(s) => vs.add(s)
-                  case None => ok = false // unencodable tuple: no sidecar
-                }
-              }
-            }
-            e.put("r", r.getLong(partCols.size))
-            val cs = e.putObject("c")
-            val sumBase = partCols.size + 1 + physKeys.size * 3
-            physKeys.zipWithIndex.foreach { case (p, j) =>
-              val base = partCols.size + 1 + j * 3
-              val c = cs.putObject(p)
-              (Option(r.get(base)).flatMap(encodeStat),
-                Option(r.get(base + 1)).flatMap(encodeStat)) match {
-                case (Some(mn), Some(mx)) => c.put("min", mn); c.put("max", mx)
-                case _ => // all-NULL or unencodable: bounds absent
-              }
-              c.put("nn", r.getLong(base + 2))
-              val si = intPhys.indexOf(p)
-              if (si >= 0) Option(r.get(sumBase + si)).foreach {
-                case l: Long => c.put("sum", l)
-                case _ =>
-              }
-            }
-            arr.add(e)
-          }
-          if (ok && leafRows.nonEmpty) {
-            val uuid = sub.substring(sub.lastIndexOf('/') + 1)
-            val os = fs.create(new Path(logDir, s"pcolstats/$uuid.json"), true)
-            try os.write(mapper.writeValueAsBytes(o)) finally os.close()
-          }
-        } catch { case _: Exception => } // sidecars are best-effort
-      }
+      if (snap.statsKeys.nonEmpty)
+        try publishPcolstats(sub, rawDir(sub), partCols,
+          snap.statsKeys.map(snap.physicalOf).distinct)
+        catch { case _: Exception => } // sidecars are best-effort
     } else {
       observed.write.mode("errorifexists").parquet(s"$dir/$sub")
     }
@@ -650,54 +462,112 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
         } catch { case _: Exception => true } // cannot even list: assume data
         if (hasFiles) -1L else 0L
       }
-    // persist bloom sidecars under the log (metadata, not data):
-    // _graft_log/blooms/<dir-uuid>__<logical-key>.bloom
+    // bloom and bounds sidecars, from the metrics that rode the write
     if (snap.bloomKeys.nonEmpty || snap.statsKeys.nonEmpty) {
       val metrics: scala.collection.Map[String, Any] =
         try obs.get catch { case _: Throwable => Map.empty[String, Any] }
-      val f = fs
       val uuid = sub.substring(sub.lastIndexOf('/') + 1)
       snap.bloomKeys.foreach { k =>
         metrics.get(s"__bloom_$k") match {
-          case Some(bytes: Array[Byte]) =>
-            val p = new Path(logDir, s"blooms/${uuid}__$k.bloom")
-            val os = f.create(p, true)
-            try os.write(bytes) finally os.close()
+          case Some(bytes: Array[Byte]) => log.publishBloom(uuid, k, bytes)
           case _ => // metric missing: no sidecar, scans simply cannot skip
         }
       }
-      // one bounds sidecar per dir: _graft_log/stats/<uuid>.json with
-      // {"<physical>": {"min": "…", "max": "…", "nn": N}} — min/max are
-      // absent for an all-NULL or unencodable column (the dir is never
-      // skipped on it); `nn` (non-null count, what COUNT(col) folds
-      // from) is recorded whenever the metric reported, 0 included
-      if (snap.statsKeys.nonEmpty) {
-        val o = mapper.createObjectNode()
-        var any = false
-        snap.statsKeys.foreach { k =>
-          val p = snap.physicalOf(k)
-          val nn = metrics.get(s"__nn_$p").collect { case l: Long => l }
-          val sm = metrics.get(s"__sum_$p").collect { case l: Long => l }
-          val mnmx = (metrics.get(s"__min_$p").flatMap(encodeStat),
-            metrics.get(s"__max_$p").flatMap(encodeStat)) match {
-            case (Some(mn), Some(mx)) => Some((mn, mx))
-            case _ => None
-          }
-          if (nn.isDefined || mnmx.isDefined) {
-            val c = o.putObject(p)
-            mnmx.foreach { case (mn, mx) => c.put("min", mn); c.put("max", mx) }
-            nn.foreach(v => c.put("nn", v))
-            sm.foreach(v => c.put("sum", v))
-            any = true
-          }
-        }
-        if (any) try {
-          val os = f.create(new Path(logDir, s"stats/$uuid.json"), true)
-          try os.write(mapper.writeValueAsBytes(o)) finally os.close()
-        } catch { case _: Exception => } // sidecars are best-effort
-      }
+      try publishStats(uuid, snap.statsKeys.map(snap.physicalOf).distinct, metrics)
+      catch { case _: Exception => } // sidecars are best-effort
     }
     (sub, rows)
+  }
+
+  /** Publishes the pstats sidecar of data dir `rel` (`depth` partition
+    * levels): per-leaf [files, rows, bytes] read from the leaves' footers
+    * in one distributed job. The dir's total rows when it was published. */
+  private def publishPstats(rel: String, depth: Int): Option[Long] = {
+    val stats = org.apache.spark.sql.GraftShim.footerStats(spark,
+      partitionLeaves(fs.makeQualified(new Path(s"$dir/$rel")), depth))
+    val o = mapper.createObjectNode()
+    stats.foreach { case (disp, nf, nr, nb) =>
+      val c = o.putObject(disp); c.put("f", nf); c.put("r", nr); c.put("b", nb)
+    }
+    if (log.publishSidecar("pstats", rel.substring(rel.lastIndexOf('/') + 1),
+      mapper.writeValueAsBytes(o))) Some(stats.map(_._3).sum) else None
+  }
+
+  /** Data dir `rel`'s rows as its files hold them, listed like every
+    * table read lists a dir — what the stats sidecars are computed from. */
+  private def rawDir(rel: String): DataFrame =
+    spark.read.option("recursiveFileLookup", "true").parquet(readPaths(Seq(rel)): _*)
+
+  /** Per `by` tuple: the row count `__r` and, per column `p` of `phys`,
+    * min `__mn_p`, max `__mx_p`, non-null count `__cn_p` and, for integral
+    * columns, the wrapping sum `__sm_p` — what the stats sidecars record,
+    * in one aggregation job over `back`. */
+  private def statRows(back: DataFrame, by: Seq[String],
+                       phys: Seq[String]): Array[org.apache.spark.sql.Row] = {
+    val aggs = count(lit(1)).as("__r") +: phys.flatMap { p =>
+      Seq(min(col(p)).as(s"__mn_$p"), max(col(p)).as(s"__mx_$p"), count(col(p)).as(s"__cn_$p")) ++
+        (if (GraftTable.integralType(back.schema(p).dataType)) Seq(sum(col(p)).as(s"__sm_$p"))
+         else Nil)
+    }
+    back.groupBy(by.map(col): _*).agg(aggs.head, aggs.tail: _*).collect()
+  }
+
+  private def named(r: org.apache.spark.sql.Row): scala.collection.Map[String, Any] =
+    r.getValuesMap[Any](r.schema.fieldNames.toSeq)
+
+  /** Adds column `p`'s entry to a stats sidecar object from the aggregates
+    * named as in [[statRows]]: min/max only when both encode (absent for
+    * an all-NULL or unencodable column, which is then never skipped on),
+    * `nn` — what COUNT(col) folds from — whenever counted, `sum` when
+    * summed. False, adding nothing, when neither was recorded. */
+  private def putColStats(o: ObjectNode, p: String,
+                          m: scala.collection.Map[String, Any]): Boolean = {
+    def get(n: String) = m.get(n).flatMap(Option(_))
+    val nn = get(s"__cn_$p").collect { case l: Long => l }
+    val bounds = for (mn <- get(s"__mn_$p").flatMap(encodeStat);
+                      mx <- get(s"__mx_$p").flatMap(encodeStat)) yield (mn, mx)
+    if (nn.isEmpty && bounds.isEmpty) return false
+    val c = o.putObject(p)
+    bounds.foreach { case (mn, mx) => c.put("min", mn); c.put("max", mx) }
+    nn.foreach(v => c.put("nn", v))
+    get(s"__sm_$p").foreach { case l: Long => c.put("sum", l); case _ => }
+    true
+  }
+
+  /** Publishes data dir `uuid`'s bounds sidecar, `stats/<uuid>.json` =
+    * {"<physical>": {"min", "max", "nn", "sum"}}, when any column has an
+    * entry. */
+  private def publishStats(uuid: String, phys: Seq[String],
+                           m: scala.collection.Map[String, Any]): Boolean = {
+    val o = mapper.createObjectNode()
+    phys.map(putColStats(o, _, m)).contains(true) &&
+      log.publishSidecar("stats", uuid, mapper.writeValueAsBytes(o))
+  }
+
+  /** Publishes data dir `rel`'s pcolstats sidecar from [[statRows]] of
+    * `back` grouped by its partition columns `by`: {"by": [names],
+    * "leaves": [{"v": [values], "r": rows, "c": {"<physical>": {…}}}]}.
+    * Nothing when there is no leaf or a partition value cannot be
+    * encoded. */
+  private def publishPcolstats(rel: String, back: DataFrame, by: Seq[String],
+                               phys: Seq[String]): Boolean = {
+    val rows = statRows(back, by, phys)
+    val o = mapper.createObjectNode()
+    val b = o.putArray("by"); by.foreach(b.add)
+    val leaves = o.putArray("leaves")
+    rows.foreach { r =>
+      val e = leaves.addObject()
+      val vs = e.putArray("v")
+      by.indices.foreach { i =>
+        if (r.isNullAt(i)) vs.addNull()
+        else vs.add(encodeStat(r.get(i)).getOrElse(return false))
+      }
+      e.put("r", r.getAs[Long]("__r"))
+      val cs = e.putObject("c")
+      phys.foreach(putColStats(cs, _, named(r)))
+    }
+    rows.nonEmpty && log.publishSidecar("pcolstats", rel.substring(rel.lastIndexOf('/') + 1),
+      mapper.writeValueAsBytes(o))
   }
 
   /** Row count of one freshly-written commit dir from its parquet footers
@@ -1430,12 +1300,7 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     val conjuncts = TransformPruning.rangeConjuncts(pred).filter { case (c, _, _) =>
       s.statsKeys.exists(_.equalsIgnoreCase(c)) && s.schema.fieldNames.contains(c)
     }
-    if (conjuncts.isEmpty) return dirs
-    val f = fs
-    val statsDir = new Path(logDir, "stats")
-    if (!f.exists(statsDir)) return dirs
-    def boundsOf(uuid: String): Option[JsonNode] =
-      GraftTable.readSidecar(f, new Path(statsDir, s"$uuid.json"), mapper)
+    if (conjuncts.isEmpty || !log.hasSidecars("stats")) return dirs
     // a LocalDateTime literal against a TIMESTAMP column means the
     // instant Spark resolves it to — the SESSION time zone's reading,
     // not UTC's (stored bounds are absolute instants)
@@ -1447,7 +1312,7 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     }
     dirs.filter { d =>
       val uuid = d.path.substring(d.path.lastIndexOf('/') + 1)
-      boundsOf(uuid) match {
+      log.sidecar("stats", uuid) match {
         case None => true
         case Some(node) => conjuncts.forall { case (c, op, rawValues) =>
           val dt = s.schema(c).dataType
@@ -1494,16 +1359,13 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     if (s.dataDirs.isEmpty) return Some(null)
     val dt = fld.dataType
     val info = s.fieldOf(fld.name)
-    val f = fs
-    val statsDir = new Path(logDir, "stats")
     val found = scala.collection.mutable.ArrayBuffer.empty[Any]
     s.dataDirs.foreach { d =>
       // a dir from before the column existed projects NULL for it: no
       // extreme to contribute, soundly skippable
       if (d.version >= info.since) {
         val uuid = d.path.substring(d.path.lastIndexOf('/') + 1)
-        val entry = GraftTable.readSidecar(f,
-          new Path(statsDir, s"$uuid.json"), mapper) match {
+        val entry = log.sidecar("stats", uuid) match {
           case None => return None // unreadable sidecar: bail
           case Some(node) => Option(node.get(info.physical))
         }
@@ -1542,14 +1404,12 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
       .getOrElse(return None)
     if (!s.statsKeys.exists(_.equalsIgnoreCase(fld.name))) return None
     val info = s.fieldOf(fld.name)
-    val f = fs
-    val statsDir = new Path(logDir, "stats")
     var total = 0L
     s.dataDirs.foreach { d =>
       if (d.version >= info.since) {
         val uuid = d.path.substring(d.path.lastIndexOf('/') + 1)
         val nn =
-          GraftTable.readSidecar(f, new Path(statsDir, s"$uuid.json"), mapper)
+          log.sidecar("stats", uuid)
             .flatMap(node => Option(node.get(info.physical)))
             .flatMap(e => Option(e.get("nn"))).map(_.asLong)
         nn match {
@@ -1635,15 +1495,12 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     if (!GraftTable.integralType(fld.dataType)) return None
     if (!s.statsKeys.exists(_.equalsIgnoreCase(fld.name))) return None
     val info = s.fieldOf(fld.name)
-    val f = fs
-    val statsDir = new Path(logDir, "stats")
     var total = 0L
     var any = false
     s.dataDirs.foreach { d =>
       if (d.version >= info.since) {
-        val node = GraftTable.readSidecar(f,
-          new Path(statsDir, s"${d.path.substring(d.path.lastIndexOf('/') + 1)}.json"),
-          mapper).getOrElse(return None)
+        val node = log.sidecar("stats", d.path.substring(d.path.lastIndexOf('/') + 1))
+          .getOrElse(return None)
         val entry = Option(node.get(info.physical)).getOrElse(return None)
         Option(entry.get("sum")) match {
           case Some(n) => total += n.asLong; any = true
@@ -1685,7 +1542,6 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
       if (!s.statsKeys.exists(_.equalsIgnoreCase(fld.name))) return None
       (fld, s.fieldOf(fld.name))
     }
-    val f = fs
     val out = scala.collection.mutable.ArrayBuffer
       .empty[(Seq[Any], Long, Seq[(Option[Any], Option[Any], Long, Option[Long])])]
     // a recorded-empty dir holds no rows and needs no sidecar
@@ -1699,9 +1555,7 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
         }
       }
       val uuid = d.path.substring(d.path.lastIndexOf('/') + 1)
-      val node = GraftTable.readSidecar(f,
-        new Path(logDir, s"pcolstats/$uuid.json"), mapper)
-        .getOrElse(return None)
+      val node = log.sidecar("pcolstats", uuid).getOrElse(return None)
       val by = Option(node.get("by")).getOrElse(return None)
       val idxs: Seq[Int] = keys.map { k =>
         (0 until by.size).find(i => by.get(i).asText().equalsIgnoreCase(k))
@@ -1765,25 +1619,11 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     val conjuncts = TransformPruning.pointConjuncts(pred)
       .filter { case (c, _) => s.bloomKeys.contains(c) }
     if (conjuncts.isEmpty) return s.dataDirs
-    val f = fs
-    val bloomsDir = new Path(logDir, "blooms")
-    val present: Set[String] =
-      if (f.exists(bloomsDir)) f.listStatus(bloomsDir).map(_.getPath.getName).toSet
-      else return s.dataDirs
-    val cache = scala.collection.mutable.Map.empty[String, Option[org.apache.spark.util.sketch.BloomFilter]]
-    def bloomOf(name: String): Option[org.apache.spark.util.sketch.BloomFilter] =
-      cache.getOrElseUpdate(name, {
-        try {
-          val in = f.open(new Path(bloomsDir, name))
-          try Some(org.apache.spark.util.sketch.BloomFilter.readFrom(in)) finally in.close()
-        } catch { case _: Exception => None } // unreadable -> never skip
-      })
+    val bloomOf = log.blooms.getOrElse(return s.dataDirs)
     s.dataDirs.filter { d =>
       val uuid = d.path.substring(d.path.lastIndexOf('/') + 1)
       conjuncts.forall { case (c, values) =>
-        val name = s"${uuid}__$c.bloom"
-        if (!present.contains(name)) true
-        else bloomOf(name).forall { bloom =>
+        bloomOf(uuid, c).forall { bloom =>
           val dt = s.schema(c).dataType
           values.exists(v =>
             org.apache.spark.sql.GraftShim.xxh64Of(v, dt,
@@ -1875,19 +1715,20 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     * newest → oldest and stops at the first satisfying version, so the
     * common recent-timestamp lookup touches O(1) log entries. */
   def versionAsOfTimestamp(tsMillis: Long): Int = {
-    val f = fs
-    def timeOf(v: Int): Long = {
-      val stamped = snapshotAt(v).commitTimeMs
-      if (stamped >= 0) stamped
-      else f.getFileStatus(new Path(logDir, f"v$v%05d.json")).getModificationTime
-    }
     var v = currentVersion
     while (v >= 0) {
-      if (timeOf(v) <= tsMillis) return v
+      if (commitTimeOf(v) <= tsMillis) return v
       v -= 1
     }
     throw new IllegalArgumentException(
       s"no snapshot committed at or before timestamp $tsMillis")
+  }
+
+  /** Commit time of version `v`: the stamp inside its entry, or the
+    * entry's mtime for a pre-stamp legacy entry. */
+  private def commitTimeOf(v: Int): Long = {
+    val stamped = snapshotAt(v).commitTimeMs
+    if (stamped >= 0) stamped else log.entryMtime(v)
   }
 
   /** Incremental (changelog) read: rows APPENDED between `fromVersion`
@@ -1950,16 +1791,18 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     require(files.forall(_.endsWith(".parquet")),
       s"add_files accepts .parquet files only; found: " +
         files.filterNot(_.endsWith(".parquet")).take(3).mkString(", "))
-    val fileSchema = spark.read.parquet(globEscape(sourceDir)).schema
+    // one relation, listed the way every table read lists a dir: the
+    // schema check and the logged row count see exactly the rows reads do
+    val source = spark.read.option("recursiveFileLookup", "true").parquet(globEscape(sourceDir))
     s.schema.fields.foreach { fld =>
       val phys = s.physicalOf(fld.name)
-      val in = fileSchema.fields.find(_.name == phys)
+      val in = source.schema.fields.find(_.name == phys)
       require(in.exists(_.dataType == fld.dataType),
         s"add_files schema mismatch for column '${fld.name}' (physical " +
           s"'$phys'): table ${fld.dataType.sql}, files " +
           s"${in.map(_.dataType.sql).getOrElse("<missing>")}")
     }
-    val rows = spark.read.parquet(globEscape(sourceDir)).count()
+    val rows = source.count()
     val sub = s"data/${java.util.UUID.randomUUID()}"
     val dest = new Path(dir, sub)
     dest.getParent.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(dest.getParent)
@@ -2535,24 +2378,19 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
       keepSnaps.flatMap(s => s.dataDirs.map(_.path) ++ s.deletes.map(_.path)).toSet
     val f = fs
     (0 until cutoff).filterNot(pinned.contains).foreach { v =>
-      val p = new Path(logDir, f"v$v%05d.json")
       // an already-expired entry has no dirs left: re-marking it is
       // pure log I/O that would grow with every call
-      val entry = if (f.exists(p)) Some(snapshotAt(v)) else None
+      val entry = if (log.hasEntry(v)) Some(snapshotAt(v)) else None
       entry.filter(_.op != "expired").foreach { s =>
         val toDelete = (s.dataDirs.map(_.path) ++ s.deletes.map(_.path))
           .filterNot(live.contains)
-        // MARKER FIRST, data delete second (write tmp + rename — readers
+        // MARKER FIRST, data delete second (an atomic replace — readers
         // only ever see valid JSON). A crash between the two leaves
         // unreferenced dirs that vacuumOrphans sweeps and readers that
         // see the clean "expired" error; the old delete-first order left
         // a readable snapshot referencing deleted files — time travel
         // failed with file-not-found instead of "expired".
-        val marker = s.copy(op = "expired", dataDirs = Seq.empty, deletes = Seq.empty)
-        val tmp = new Path(logDir, f"v$v%05d.json.tmp")
-        val os = f.create(tmp, true)
-        try os.write(writeSnapshot(marker).getBytes("UTF-8")) finally os.close()
-        replaceAtomic(tmp, p) // a log entry must never be observably missing
+        log.replaceEntry(v, s.copy(op = "expired", dataDirs = Seq.empty, deletes = Seq.empty))
         toDelete.foreach(rel => f.delete(new Path(dir, rel), true))
       }
     }
@@ -2570,24 +2408,16 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
   def expireSnapshotsOlderThan(olderThanMs: Long, keepLast: Int = 1): GraftTable = {
     require(olderThanMs >= 0, "grace must be non-negative")
     val cutoff = System.currentTimeMillis() - olderThanMs
-    val f = fs
-    def timeOf(v: Int): Long = {
-      val stamped = snapshotAt(v).commitTimeMs
-      if (stamped >= 0) stamped
-      else f.getFileStatus(new Path(logDir, f"v$v%05d.json")).getModificationTime
-    }
     val cur = currentVersion
     // oldest version still young enough to keep; commit times are
     // monotone (single log), so everything at or after it survives
     var keepFrom = cur
-    while (keepFrom > 0 && timeOf(keepFrom - 1) > cutoff) keepFrom -= 1
+    while (keepFrom > 0 && commitTimeOf(keepFrom - 1) > cutoff) keepFrom -= 1
     expireSnapshots(math.max(keepLast, cur - keepFrom + 1))
   }
 
   // ---- named refs: tags, branches, rollback, cherry-pick ---------------
 
-  private def refsDir = new Path(logDir, "refs")
-  private def refPath(name: String) = new Path(refsDir, s"$name.json")
   private def validRefName(name: String): Unit =
     require(name.matches("[A-Za-z0-9][A-Za-z0-9._-]*"), s"invalid ref name: $name")
 
@@ -2606,9 +2436,7 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     require(version >= 0 && version <= currentVersion, s"no snapshot v$version")
     require(snapshotAt(version).op != "expired",
       s"cannot create a ref at expired snapshot v$version")
-    fs.mkdirs(refsDir)
-    val json = s"""{"name":"$name","type":"$tpe","version":$version}"""
-    require(writeOnce(refPath(name), json.getBytes("UTF-8")), s"ref already exists: $name")
+    require(log.publishRef(RefInfo(name, tpe, version)), s"ref already exists: $name")
     this
   }
 
@@ -2620,11 +2448,7 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     require(version >= 0 && version <= currentVersion, s"no snapshot v$version")
     require(snapshotAt(version).op != "expired",
       s"cannot point a ref at expired snapshot v$version")
-    val tmp = new Path(refsDir, s"$name.json.tmp")
-    val os = fs.create(tmp, true)
-    try os.write(s"""{"name":"$name","type":"branch","version":$version}"""
-      .getBytes("UTF-8")) finally os.close()
-    replaceAtomic(tmp, refPath(name)) // the ref must never be observably missing
+    log.replaceRef(RefInfo(name, "branch", version)) // never observably missing
     this
   }
 
@@ -2633,23 +2457,12 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
   def fastForward(name: String): GraftTable = setBranch(name, currentVersion)
 
   def dropRef(name: String): GraftTable = {
-    require(fs.exists(refPath(name)), s"no such ref: $name")
-    fs.delete(refPath(name), false)
+    require(log.hasRef(name), s"no such ref: $name")
+    log.dropRef(name)
     this
   }
 
-  def refs: Seq[RefInfo] = {
-    val f = fs
-    if (!f.exists(refsDir)) return Seq.empty
-    f.listStatus(refsDir).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".json"))
-      .map { st =>
-        val in = f.open(st.getPath)
-        val txt = try scala.io.Source.fromInputStream(in).mkString finally in.close()
-        val n = mapper.readTree(txt)
-        RefInfo(n.get("name").asText(), n.get("type").asText(), n.get("version").asInt())
-      }.sortBy(_.name)
-  }
+  def refs: Seq[RefInfo] = log.refs
 
   def refOf(name: String): RefInfo = refs.find(_.name == name)
     .getOrElse(throw new IllegalArgumentException(s"no such ref: $name"))
@@ -2660,7 +2473,7 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     * that listing grows with stream age and turns publishes O(n²). */
   def hasRef(name: String): Boolean = {
     validRefName(name)
-    fs.exists(refPath(name))
+    log.hasRef(name)
   }
 
   /** The table as of a named ref — `VERSION AS OF '<ref>'`. */
@@ -2725,9 +2538,6 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
 
   // ---- write-audit-publish (staged appends) -----------------------------
 
-  private def stagedMetaDir = new Path(logDir, "staged")
-  private def stagedPath(id: String) = new Path(stagedMetaDir, s"$id.json")
-
   /** WAP step 1 — WRITE: materializes `df` through the normal write
     * discipline (aligned, clustered/rebalanced, k=v layout) into an
     * UNCOMMITTED data dir and records a staged marker under the log.
@@ -2737,17 +2547,14 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     val s = snapshot
     val (sub, rows) = writeData(df, s)
     val id = sub.stripPrefix("data/")
-    fs.mkdirs(stagedMetaDir)
-    require(writeOnce(stagedPath(id),
-      s"""{"path":"$sub","rows":$rows,"stagedAt":${s.version}}""".getBytes("UTF-8")),
-      s"staged id collision: $id")
+    require(log.publishStaged(id, sub, rows, s.version), s"staged id collision: $id")
     id
   }
 
   /** WAP step 2 — AUDIT: the staged rows, aliased to the logical schema
     * (columns added since staging read as NULL). */
   def stagedDF(id: String): DataFrame = {
-    val (sub, rows, _) = readStaged(id)
+    val (sub, rows, _) = log.staged(id)
     // rows == -1 means staged with an unknown count — still real data;
     // publishStaged commits it, so the AUDIT step must surface it too.
     if (rows == 0) emptyDF(snapshot)
@@ -2757,7 +2564,7 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
   /** WAP step 3 — PUBLISH: metadata-only commit of the staged dir (no
     * row data moves); the marker is consumed. */
   def publishStaged(id: String): GraftTable = {
-    val (sub, rows, stagedAt) = readStaged(id)
+    val (sub, rows, stagedAt) = log.staged(id)
     if (rows != 0) { // -1 = staged with unknown count: still real data
       val cur = snapshot
       commit(cur.version + 1)((rebase, v) => {
@@ -2772,13 +2579,13 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
         b.copy(version = v, op = "append", dataDirs = b.dataDirs :+ DataDir(sub, v, rows))
       })
     }
-    fs.delete(stagedPath(id), false)
+    log.dropStaged(id)
     this
   }
 
   /** Discards a staged append (audit failed): files + marker removed. */
   def abortStaged(id: String): Unit = {
-    val (sub, _, _) = readStaged(id)
+    val (sub, _, _) = log.staged(id)
     // crashed-publish window: publishStaged commits FIRST, then consumes
     // the marker — a crash between the two leaves a marker pointing at a
     // dir the table now references. Aborting that marker must consume it
@@ -2787,38 +2594,12 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     val referenced = allSnapshots.exists(s =>
       s.op != "expired" && s.dataDirs.exists(_.path == sub))
     if (!referenced) fs.delete(new Path(dir, sub), true)
-    fs.delete(stagedPath(id), false)
+    log.dropStaged(id)
   }
 
   /** Ids of pending staged appends. */
-  def stagedIds: Seq[String] = {
-    val f = fs
-    if (!f.exists(stagedMetaDir)) Seq.empty
-    else f.listStatus(stagedMetaDir).toSeq.map(_.getPath.getName)
-      .filter(_.endsWith(".json")).map(_.stripSuffix(".json")).sorted
-  }
+  def stagedIds: Seq[String] = log.stagedIds
 
-  private def readStaged(id: String): (String, Long, Int) = {
-    require(fs.exists(stagedPath(id)), s"no staged append: $id")
-    val in = fs.open(stagedPath(id))
-    val txt = try scala.io.Source.fromInputStream(in).mkString finally in.close()
-    val n = mapper.readTree(txt)
-    (n.get("path").asText(), n.get("rows").asLong(), n.get("stagedAt").asInt())
-  }
-
-  /** Orphan-file sweep (Iceberg's `remove_orphan_files`): deletes
-    * `data/` / `deletes/` subdirs referenced by NO snapshot in the log —
-    * the residue of crashed writers (a streaming epoch that died between
-    * file write and commit, an aborted DSv2 job, a lost OCC race whose
-    * abort never ran). Only dirs last modified before `olderThanMs` are
-    * touched: an in-flight writer's dir is younger than any sane grace
-    * period, so the sweep can run concurrently with live traffic — the
-    * maintenance action a 100 TB deployment schedules alongside
-    * [[expireSnapshots]] and [[rewriteSmallDirs]]. The default grace of
-    * 3 days (Iceberg's remove_orphan_files default) must exceed the
-    * longest plausible write job: a k=v-partitioned write only bumps the
-    * top dir's mtime at subdir creation. Returns removed (relative) dir
-    * paths. */
   /** ANALYZE-style stats backfill (the role Iceberg's `ANALYZE TABLE` /
     * manifest-metrics rewrite plays): builds any MISSING fold sidecars
     * for live data dirs — per-dir bounds+nn (`stats/`), per-leaf rows
@@ -2833,117 +2614,31 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     * never overwritten. Returns the artifacts written. */
   def captureStats(): Seq[String] = {
     val s = snapshot
-    val f = fs
     val done = scala.collection.mutable.ArrayBuffer.empty[String]
     val physKeys = s.statsKeys.map(s.physicalOf).distinct
     s.dataDirs.foreach { d =>
       try {
         val uuid = d.path.substring(d.path.lastIndexOf('/') + 1)
         val spec = s.specAt(d.version)
-        val root = f.makeQualified(new Path(s"$dir/${d.path}"))
-        val statsP = new Path(logDir, s"stats/$uuid.json")
-        val pstatsP = new Path(logDir, s"pstats/$uuid.json")
-        val pcolP = new Path(logDir, s"pcolstats/$uuid.json")
-        val needStats = physKeys.nonEmpty && !f.exists(statsP)
-        val needPcol = physKeys.nonEmpty && spec.nonEmpty && !f.exists(pcolP)
+        val needStats = physKeys.nonEmpty && !log.hasSidecar("stats", uuid)
+        val needPcol = physKeys.nonEmpty && spec.nonEmpty && !log.hasSidecar("pcolstats", uuid)
         if (needStats || needPcol) {
-          val back = spark.read.parquet(globEscape(root.toString))
+          val back = rawDir(d.path)
           // columns physically present in THIS dir's files: a dir from
           // before a column existed simply records no entry for it (the
           // fold readers skip such dirs by FieldInfo.since)
           val present = physKeys.filter(back.columns.contains)
-          val intPresent = present.filter(p =>
-            GraftTable.integralType(back.schema(p).dataType))
-          if (needStats && present.nonEmpty) {
-            val aggs = present.flatMap { p =>
-              Seq(min(col(p)).as(s"__mn_$p"), max(col(p)).as(s"__mx_$p"),
-                count(col(p)).as(s"__cn_$p"))
-            } ++ intPresent.map(p => sum(col(p)).as(s"__sm_$p"))
-            val r = back.agg(aggs.head, aggs.tail: _*).head()
-            val sumBase = present.size * 3
-            val o = mapper.createObjectNode()
-            present.zipWithIndex.foreach { case (p, j) =>
-              val c = o.putObject(p)
-              (Option(r.get(j * 3)).flatMap(encodeStat),
-                Option(r.get(j * 3 + 1)).flatMap(encodeStat)) match {
-                case (Some(mn), Some(mx)) => c.put("min", mn); c.put("max", mx)
-                case _ => // all-NULL or unencodable: bounds absent
-              }
-              c.put("nn", r.getLong(j * 3 + 2))
-              val si = intPresent.indexOf(p)
-              if (si >= 0) Option(r.get(sumBase + si)).foreach {
-                case l: Long => c.put("sum", l)
-                case _ =>
-              }
-            }
-            val os = f.create(statsP, false)
-            try os.write(mapper.writeValueAsBytes(o)) finally os.close()
+          if (needStats && present.nonEmpty &&
+              publishStats(uuid, present, named(statRows(back, Nil, present).head)))
             done += s"stats/$uuid"
-          }
           val derived = spec.map(_.name)
-          if (needPcol && present.nonEmpty && derived.forall(back.columns.contains)) {
-            val aggs = (count(lit(1)).as("__r") +: present.flatMap { p =>
-              Seq(min(col(p)).as(s"__mn_$p"), max(col(p)).as(s"__mx_$p"),
-                count(col(p)).as(s"__cn_$p"))
-            }) ++ intPresent.map(p => sum(col(p)).as(s"__sm_$p"))
-            val leafRows = back.groupBy(derived.map(col): _*)
-              .agg(aggs.head, aggs.tail: _*).collect()
-            val o = mapper.createObjectNode()
-            val by = o.putArray("by"); derived.foreach(by.add)
-            val arr = o.putArray("leaves")
-            var ok = true
-            leafRows.foreach { r =>
-              val e = mapper.createObjectNode()
-              val vs = e.putArray("v")
-              derived.indices.foreach { i =>
-                r.get(i) match {
-                  case null => vs.addNull()
-                  case v => encodeStat(v) match {
-                    case Some(enc) => vs.add(enc)
-                    case None => ok = false
-                  }
-                }
-              }
-              e.put("r", r.getLong(derived.size))
-              val cs = e.putObject("c")
-              val sumBase = derived.size + 1 + present.size * 3
-              present.zipWithIndex.foreach { case (p, j) =>
-                val base = derived.size + 1 + j * 3
-                val c = cs.putObject(p)
-                (Option(r.get(base)).flatMap(encodeStat),
-                  Option(r.get(base + 1)).flatMap(encodeStat)) match {
-                  case (Some(mn), Some(mx)) => c.put("min", mn); c.put("max", mx)
-                  case _ =>
-                }
-                c.put("nn", r.getLong(base + 2))
-                val si = intPresent.indexOf(p)
-                if (si >= 0) Option(r.get(sumBase + si)).foreach {
-                  case l: Long => c.put("sum", l)
-                  case _ =>
-                }
-              }
-              arr.add(e)
-            }
-            if (ok && leafRows.nonEmpty) {
-              val os = f.create(pcolP, false)
-              try os.write(mapper.writeValueAsBytes(o)) finally os.close()
-              done += s"pcolstats/$uuid"
-            }
-          }
+          if (needPcol && present.nonEmpty && derived.forall(back.columns.contains) &&
+              publishPcolstats(d.path, back, derived, present))
+            done += s"pcolstats/$uuid"
         }
-        if (spec.nonEmpty && !f.exists(pstatsP)) {
-          val leaves = partitionLeaves(root, spec.size)
-          val stats = org.apache.spark.sql.GraftShim.footerStats(spark, leaves)
-          val o = mapper.createObjectNode()
-          stats.foreach { case (disp, nf, nr, nb) =>
-            val c = o.putObject(disp); c.put("f", nf); c.put("r", nr); c.put("b", nb)
-          }
-          if (stats.nonEmpty) {
-            val os = f.create(pstatsP, false)
-            try os.write(mapper.writeValueAsBytes(o)) finally os.close()
-            done += s"pstats/$uuid"
-          }
-        }
+        if (spec.nonEmpty && !log.hasSidecar("pstats", uuid) &&
+            publishPstats(d.path, spec.size).isDefined)
+          done += s"pstats/$uuid"
       } catch { case _: Exception => } // per-dir best-effort
     }
     // refresh unknown (-1) dir row counts: ONE content-preserving commit
@@ -2965,6 +2660,20 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     done.toSeq
   }
 
+  /** Orphan-file sweep (Iceberg's `remove_orphan_files`): deletes
+    * `data/` / `deletes/` subdirs referenced by NO snapshot in the log —
+    * the residue of crashed writers (a streaming epoch that died between
+    * file write and commit, an aborted DSv2 job, a lost OCC race whose
+    * abort never ran). Only dirs last modified before `olderThanMs` are
+    * touched: an in-flight writer's dir is younger than any sane grace
+    * period, so the sweep can run concurrently with live traffic — the
+    * maintenance action a 100 TB deployment schedules alongside
+    * [[expireSnapshots]] and [[rewriteSmallDirs]]. The default grace of
+    * 3 days (Iceberg's remove_orphan_files default) must exceed the
+    * longest plausible write job: a k=v-partitioned write only bumps the
+    * top dir's mtime at subdir creation. The same window sweeps the log's
+    * garbage ([[LogStore.sweep]]). Returns removed paths, relative to
+    * the table dir. */
   def vacuumOrphans(olderThanMs: Long = 3L * 24 * 3600 * 1000): Seq[String] = {
     val cur = currentVersion
     val referenced: Set[String] = ((0 to cur).flatMap { v =>
@@ -2983,36 +2692,12 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
           !referenced.contains(s"$root/${st.getPath.getName}"))
         .map { st => f.delete(st.getPath, true); s"$root/${st.getPath.getName}" }
     }
-    // sidecar GC: bloom/bounds files are keyed by dir uuid — once no
-    // snapshot references the dir (expired or just vacuumed), its
-    // sidecars are dead metadata; at scale they'd otherwise accumulate
-    // one small file per dead dir forever. A sidecar of a LIVE dir is
-    // never touched (uuid membership, not age).
-    val liveUuids = referenced.map(p => p.substring(p.lastIndexOf('/') + 1))
-    val sidecars = Seq(("blooms", (n: String) => n.takeWhile(_ != '_')),
-      ("stats", (n: String) => n.stripSuffix(".json")),
-      ("pstats", (n: String) => n.stripSuffix(".json")),
-      ("pcolstats", (n: String) => n.stripSuffix(".json")))
-    val sweptSidecars = sidecars.flatMap { case (sub, uuidOf) =>
-      val rp = new Path(logDir, sub)
-      if (!f.exists(rp)) Seq.empty
-      else f.listStatus(rp).toSeq
-        // same grace window as the dirs: an in-flight writer creates the
-        // sidecar BEFORE its commit — sweeping it early would silently
-        // strip the new dir's skipping metadata
-        .filter(st => st.isFile && st.getModificationTime < cutoff &&
-          !liveUuids.contains(uuidOf(st.getPath.getName)))
-        .map { st => f.delete(st.getPath, false); s"_graft_log/$sub/${st.getPath.getName}" }
-    }
-    // merged-delete scratch (large equality-delete scans): derived data,
-    // re-created on demand — age alone decides, like staging/
-    val scratchRoot = new Path(logDir, "scratch")
-    val sweptScratch =
-      if (!f.exists(scratchRoot)) Seq.empty
-      else f.listStatus(scratchRoot).toSeq
-        .filter(st => st.isDirectory && st.getModificationTime < cutoff)
-        .map { st => f.delete(st.getPath, true); s"_graft_log/scratch/${st.getPath.getName}" }
-    removed ++ sweptSidecars ++ sweptScratch
+    // log GC: sidecars are keyed by dir uuid — once no snapshot
+    // references the dir (expired or just vacuumed) they are dead
+    // metadata that would otherwise accumulate one small file per dead
+    // dir forever; merged-delete scratch is re-created on demand; a temp
+    // is what a writer that died before publishing left
+    removed ++ log.sweep(cutoff, referenced.map(p => p.substring(p.lastIndexOf('/') + 1)))
   }
 
   // ---- DML (delegates to the planner; commits copy-on-write) ----------
@@ -3177,9 +2862,7 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
   private def pstatsOf(d: DataDir): Option[Seq[(String, Long, Long, Long)]] = {
     val uuid = d.path.substring(d.path.lastIndexOf('/') + 1)
     try {
-      val node = GraftTable.readSidecar(fs,
-        new Path(logDir, s"pstats/$uuid.json"), mapper)
-        .getOrElse(return None)
+      val node = log.sidecar("pstats", uuid).getOrElse(return None)
       val it = node.fields()
       val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long, Long)]
       while (it.hasNext) {
@@ -3350,10 +3033,14 @@ object GraftTable {
     }
     val underRoot = substring(path, instr(path, rootPath) + rootPath.length, lit(Int.MaxValue))
     val byDir = typedLit(entries.toMap)
-    coalesce(byDir(substring_index(underRoot, "/", 2)),
-      raise_error(concat(
-        lit("graft: cannot derive commit version — file '"), path,
-        lit("' is in no logged dir of this relation"))))
+    // never NULL (a version or an error): saying so keeps the optimizer
+    // from inferring an `isnotnull` filter on it, which would evaluate the
+    // lookup a second time per row below the projection
+    org.apache.spark.sql.GraftShim.knownNotNull(
+      coalesce(byDir(substring_index(underRoot, "/", 2)),
+        raise_error(concat(
+          lit("graft: cannot derive commit version — file '"), path,
+          lit("' is in no logged dir of this relation")))))
   }
 
   /** A copy-on-write replace lost its OCC race against a row-changing
@@ -3416,32 +3103,6 @@ object GraftTable {
     * what a `SELECT` resolves to — as are append/overwrite/rowdelta/
     * rollback/cherrypick (row changes) and compaction (op "overwrite",
     * indistinguishable from a real overwrite in the log). */
-  /** Session-lifetime parse cache for sidecar JSONs (bounds / pstats /
-    * pcolstats). Sidecars are WRITE-ONCE per dir uuid — created at
-    * commit (or by capture_stats for missing ones), never mutated — so
-    * a parsed positive is valid for the uuid's lifetime; misses are NOT
-    * cached (capture_stats may create the file later). This bounds the
-    * O(dirs) driver metadata reads the fold and pruning paths would
-    * otherwise repeat on every analyzed query: at 100 TB, thousands of
-    * object-store GETs per dashboard aggregate become hash lookups. */
-  private val sidecarCache = new java.util.concurrent.ConcurrentHashMap[
-    String, com.fasterxml.jackson.databind.JsonNode]()
-
-  private[table] def readSidecar(fs: org.apache.hadoop.fs.FileSystem,
-      p: Path, mapper: com.fasterxml.jackson.databind.ObjectMapper)
-      : Option[com.fasterxml.jackson.databind.JsonNode] = {
-    val key = fs.makeQualified(p).toString
-    Option(sidecarCache.get(key)).orElse {
-      try {
-        val in = fs.open(p)
-        val node = try mapper.readTree(in) finally in.close()
-        if (sidecarCache.size > 65536) sidecarCache.clear() // crude bound
-        sidecarCache.put(key, node)
-        Some(node)
-      } catch { case _: Exception => None }
-    }
-  }
-
   val ContentPreservingOps: Set[String] = Set(
     "set-properties", "set-stats-keys", "set-bloom-keys", "set-spec",
     "replace-key", "upgrade-format", "rewrite", "capture-stats")
@@ -3473,17 +3134,11 @@ object GraftTable {
     key.foreach(k => require(schema.fieldNames.contains(k),
       s"key column $k not in schema"))
     requireKeyTypes(schema, key)
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logDir = new Path(dir, "_graft_log")
-    require(!fs.exists(logDir), s"table already exists at $dir")
-    fs.mkdirs(logDir)
+    require(!t.log.exists, s"table already exists at $dir")
     val snap = Snapshot(0, formatVersion, "create", schema,
       schema.fieldNames.toSeq.map(n => FieldInfo(n, n, 0)), spec, key, Seq.empty, Seq.empty,
       Seq.empty, bloomKeys, statsKeys, commitTimeMs = System.currentTimeMillis())
-    // through the same write-once claim as every later entry (no
-    // checksum sibling that a raw-FileContext expiry rename would stale)
-    require(t.writeOnce(new Path(logDir, "v00000.json"), writeSnapshot(snap).getBytes("UTF-8")),
-      s"table already exists at $dir")
+    require(t.log.publishEntry(0, snap), s"table already exists at $dir")
     t
   }
 
@@ -3493,10 +3148,7 @@ object GraftTable {
     t
   }
 
-  def exists(spark: SparkSession, dir: String): Boolean = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(new Path(dir, "_graft_log"))
-  }
+  def exists(spark: SparkSession, dir: String): Boolean = LogStore(spark, dir).exists
 
   /** Upsert/sort keys participate in equality-delete matching through JVM
     * map lookups, where boxed equality must agree with SQL equality.

@@ -22,6 +22,11 @@ object GraftShim {
   def column(e: catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
 
+  /** `c`, declared non-nullable to the optimizer (Catalyst's
+    * `KnownNotNull`); the caller guarantees it never yields NULL. */
+  def knownNotNull(c: Column): Column =
+    column(catalyst.expressions.KnownNotNull(expression(c)))
+
   /** Free the block-store blocks behind an eager `localCheckpoint`ed
     * Dataset NOW. `Dataset.unpersist` goes through the cacheManager and
     * is a NO-OP for checkpoint RDDs — without this the blocks sit in the

@@ -5,13 +5,13 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.table._
 
-/** Crash-window behavior of the commit protocol. The slot claim is
-  * `File.createNewFile()` (O_EXCL) followed by streaming the JSON in —
-  * so a reader can observe a claimed-but-empty entry. These specs pin
-  * the two documented outcomes: a reader RETRIES through the streaming
-  * window (and succeeds once content lands), and an ABANDONED claim
-  * (writer died post-claim) fails loudly instead of hanging or
-  * silently skipping the version. */
+/** Crash-window behavior of the commit protocol. Every log write is
+  * content-complete: its bytes go to a temp under `_graft_log/_tmp/`
+  * and are then published in one step, so readers never retry. These
+  * specs pin the outcomes: a temp a dead writer left is invisible and
+  * vacuumable, and an empty entry (which no graft writer produces any
+  * more) fails loudly instead of hanging or silently skipping the
+  * version. */
 class CrashRecoverySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.session
   import spark.implicits._
@@ -19,40 +19,14 @@ class CrashRecoverySpec extends AnyFunSuite {
   private val schema = StructType(Seq(
     StructField("id", LongType), StructField("v", StringType)))
 
-  test("reader retries through a claimed-but-streaming commit window") {
-    val dir = TestSpark.tmpDir("crash-stream")
-    val t = GraftTable.create(spark, dir, schema)
-    t.append(Seq((1L, "a")).toDF("id", "v"))
-    val log = new java.io.File(dir, "_graft_log")
-    val v1 = new java.io.File(log, "v00001.json")
-    val v2 = new java.io.File(log, "v00002.json")
-    // simulate a concurrent writer: slot claimed (empty file exists),
-    // content arrives 300ms later — a version-2 snapshot body (the v1
-    // entry re-stamped, the shape a rollback commit produces)
-    assert(v2.createNewFile())
-    val body = new String(java.nio.file.Files.readAllBytes(v1.toPath), "UTF-8")
-      .replaceFirst("\"version\"\\s*:\\s*1", "\"version\":2")
-    val writer = new Thread(() => {
-      Thread.sleep(300)
-      java.nio.file.Files.write(v2.toPath, body.getBytes("UTF-8"))
-    })
-    writer.start()
-    try {
-      // load() resolves currentVersion = 2 (the claim exists) and must
-      // retry through the empty-file window instead of declaring the
-      // log corrupt
-      val loaded = GraftTable.load(spark, dir)
-      assert(loaded.snapshot.version == 2)
-      assert(loaded.toDF.count() == 1)
-    } finally writer.join()
-  }
-
   test("an abandoned claim (writer died post-claim) fails loudly, not silently") {
     val dir = TestSpark.tmpDir("crash-abandon")
     val t = GraftTable.create(spark, dir, schema)
     t.append(Seq((1L, "a")).toDF("id", "v"))
+    // an empty v2 — what the old create-then-stream claim left when its
+    // writer died; publishing never does, so an empty entry is a fault
     val v2 = new java.io.File(new java.io.File(dir, "_graft_log"), "v00002.json")
-    assert(v2.createNewFile()) // claim with no content, forever
+    assert(v2.createNewFile())
     val e = intercept[IllegalStateException] {
       GraftTable.load(spark, dir).snapshot
     }
@@ -61,6 +35,39 @@ class CrashRecoverySpec extends AnyFunSuite {
     // recovery: removing the dead claim restores the table untouched
     assert(v2.delete())
     assert(GraftTable.load(spark, dir).toDF.count() == 1)
+  }
+
+  test("a temp left by a writer that died before publishing is invisible and vacuumable") {
+    val dir = TestSpark.tmpDir("crash-temp")
+    val t = GraftTable.create(spark, dir, schema, key = Seq("id"))
+    t.append(Seq((1L, "a")).toDF("id", "v"))
+    t.createTag("keep", 1)
+    val id = t.stageAppend(Seq((2L, "b")).toDF("id", "v"))
+    val log = java.nio.file.Paths.get(dir, "_graft_log")
+    val tmp = log.resolve("_tmp")
+    java.nio.file.Files.createDirectories(tmp)
+    // the full bodies a dying writer had written, never published: a
+    // next slot, a ref and a staged marker
+    val dead = Seq(
+      "v00002.json" -> log.resolve("v00001.json"),
+      "other.json" -> log.resolve("refs/keep.json"),
+      "dead.json" -> log.resolve(s"staged/$id.json")).map { case (name, from) =>
+      val p = tmp.resolve(s"$name.${java.util.UUID.randomUUID()}.tmp")
+      java.nio.file.Files.copy(from, p)
+      p
+    }
+    val live = GraftTable.load(spark, dir)
+    assert(live.currentVersion == 1)
+    assert(live.refs.map(_.name) == Seq("keep"))
+    assert(live.stagedIds == Seq(id))
+    // a young temp may belong to a writer still in flight
+    assert(live.vacuumOrphans().isEmpty)
+    assert(dead.forall(java.nio.file.Files.exists(_)))
+    val swept = live.vacuumOrphans(olderThanMs = -1000)
+    assert(dead.forall(p => swept.contains(s"_graft_log/_tmp/${p.getFileName}")), swept)
+    assert(dead.forall(p => !java.nio.file.Files.exists(p)))
+    assert(live.currentVersion == 1 && live.toDF.count() == 1)
+    assert(live.stagedIds == Seq(id), "the staged marker itself must survive")
   }
 
   test("a crashed writer's data dir (no commit) is invisible and vacuumable") {

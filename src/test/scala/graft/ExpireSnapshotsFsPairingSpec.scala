@@ -4,9 +4,10 @@ import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.BasicFileAttributes
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.GraftLocalFileSystem
-import graft.table.GraftTable
+import graft.table.{GraftTable, RefInfo}
 
-/** Repeated `expireSnapshots` under both local filesystem pairings:
+/** Repeated `expireSnapshots`, then tags and branch moves, under both
+  * local filesystem pairings:
   *
   *  - Hadoop's default (checksummed `FileSystem` and checksummed
   *    `FileContext`);
@@ -48,6 +49,19 @@ class ExpireSnapshotsFsPairingSpec extends AnyFunSuite {
     assert(t.allSnapshots.map(_.op).count(_ == "expired") == 6)
     assert(t.toDF.count() == 7L)
     assert(t.toDF.select("id").as[Long].collect().sorted.toSeq == (1L to 7L))
+    // refs ride the same pairing: a published tag, and a branch replaced
+    // twice (the second replace overwrites a renamed-in file)
+    t.createTag("keep", 6)
+    t.createBranch("dev", 6)
+    t.setBranch("dev", 7)
+    t.setBranch("dev", 6)
+    assert(intercept[IllegalArgumentException](t.createTag("keep", 7))
+      .getMessage.contains("already exists"))
+    val again = GraftTable.load(spark, dir)
+    assert(again.refs == Seq(RefInfo("dev", "branch", 6), RefInfo("keep", "tag", 6)))
+    again.append(Seq((8L, "v8")).toDF("id", "v"))
+    again.expireSnapshots(1)
+    assert(again.asOfRef("dev").count() == 6L && again.snapshotAt(7).op == "expired")
   }
 
   test("expireSnapshots repeats cleanly under Hadoop's default FS pairing") {

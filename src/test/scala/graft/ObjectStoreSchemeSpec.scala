@@ -71,9 +71,9 @@ class ObjectStoreSchemeSpec extends AnyFunSuite {
       .select(col("id"), col("seg"), col("bal")).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).sortBy(_._1).toSeq
     assert(current() == expectAfter.toSeq, "MoR state wrong on the foreign scheme")
-    // tags through the NON-file writeOnce branch (create-exclusive), and
+    // tags through the NON-file publish (exists check, then rename), and
     // the duplicate-tag conflict must still be detected without a local
-    // createNewFile
+    // hard link
     val pinV = GraftTable.load(spark, dir).currentVersion
     GraftTable.load(spark, dir).createTag("keep", pinV)
     val dup = intercept[IllegalArgumentException] {
@@ -100,6 +100,10 @@ class ObjectStoreSchemeSpec extends AnyFunSuite {
     assert(new File(MockObjectStoreFS.root,
       "testbucket/my-iceberg-warehouse/cust/_graft_log").isDirectory,
       "table log did not land under the object-store root")
+    // every publish and replace consumed its temp
+    val temps = new File(MockObjectStoreFS.root,
+      "testbucket/my-iceberg-warehouse/cust/_graft_log/_tmp").list()
+    assert(temps == null || temps.isEmpty, s"temps left behind: ${temps.mkString(", ")}")
     // and the path the engine saw was the foreign scheme throughout
     assert(new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
       .getScheme == "mock3a")

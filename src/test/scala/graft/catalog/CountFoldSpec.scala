@@ -108,6 +108,36 @@ class CountFoldSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.contains("schema mismatch"))
   }
 
+  test("add_files logs the row count reads return, listing subfolders like reads do") {
+    // 2 rows at the top of the source and 2 in a plain (non k=v) subfolder
+    val ext = java.nio.file.Files.createTempDirectory("graft_ext_sub").toString + "/batch"
+    Seq((2L, "b"), (3L, "c")).toDF("id", "v").write.parquet(ext)
+    Seq((4L, "d"), (5L, "e")).toDF("id", "v").write.parquet(s"$ext/data")
+    val t = GraftTable.create(spark, s"$warehouse/db/mig_sub", idv)
+    t.addFiles(ext)
+    assert(t.snapshot.dataDirs.last.rowCount == t.toDF.count())
+    assert(t.toDF.count() == 4L)
+    assert(spark.sql("SELECT count(*) FROM graft.db.mig_sub").as[Long].head() == 4L)
+    // a source whose files all sit in such a subfolder is accepted
+    val nested = java.nio.file.Files.createTempDirectory("graft_ext_nested").toString + "/batch"
+    Seq((6L, "f"), (7L, "g")).toDF("id", "v").write.parquet(s"$nested/data")
+    t.addFiles(nested)
+    assert(t.snapshot.dataDirs.last.rowCount == 2L)
+    assert(t.toDF.count() == 6L)
+  }
+
+  test("capture_stats over an add_files dir with a subfolder folds the rows reads return") {
+    val ext = java.nio.file.Files.createTempDirectory("graft_ext_stats").toString + "/batch"
+    Seq((2L, "b"), (3L, "c")).toDF("id", "v").write.parquet(ext)
+    Seq((4L, "d"), (5L, "e")).toDF("id", "v").write.parquet(s"$ext/data")
+    val t = GraftTable.create(spark, s"$warehouse/db/mig_stats", idv, statsKeys = Seq("id"))
+    t.addFiles(ext)
+    assert(t.captureStats().exists(_.startsWith("stats/")))
+    val q = "SELECT count(id), min(id), max(id), sum(id) FROM graft.db.mig_stats"
+    assert(isFolded(q))
+    assert(spark.sql(q).as[(Long, Long, Long, Long)].head() == ((4L, 2L, 5L, 14L)))
+  }
+
   test("min/max on a stats column fold from the bounds sidecars") {
     val t = GraftTable.create(spark, s"$warehouse/db/mm", idv,
       statsKeys = Seq("id"))
