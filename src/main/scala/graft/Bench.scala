@@ -46,10 +46,11 @@ object Bench {
     * contention window, so min-over-2 did not converge for 5 queries
     * (2.7–10× their committed record with identical plans and io). A
     * query whose min still exceeds 2× its committed value earns extra
-    * reps; everything else pays nothing. Failed (negative) records and
-    * a missing/unparseable file degrade to "no reference" — never to a
-    * broken bench. */
-  private[graft] def committedRecord(sfDir: String): Map[String, Double] = {
+    * reps; everything else pays nothing. Failed (negative) records, a
+    * record from another scale factor or thread count (`env.threads`,
+    * `SPARK_GRAFT_CPUS`), and a missing/unparseable file degrade to "no
+    * reference" — never to a broken bench. */
+  private[graft] def committedRecord(sfDir: String, threads: String): Map[String, Double] = {
     val txt = try scala.sys.process.Process(
       Seq("git", "show", "HEAD:bench_full.json"), new java.io.File(".")).!!
     catch { case _: Throwable => return Map.empty }
@@ -65,6 +66,10 @@ object Bench {
     val recSf = "\"sf\":\"([^\"]+)\"".r.findFirstMatchIn(txt).map(_.group(1))
     if (!recSf.map(new java.io.File(_).getName)
       .contains(new java.io.File(sfDir).getName)) return Map.empty
+    // likewise the thread count: per-query times of an 8-thread record
+    // are no reference for a run on another core count
+    if (!"\"threads\":\"([^\"]+)\"".r.findFirstMatchIn(txt).map(_.group(1))
+      .contains(threads.trim)) return Map.empty
     val qseg = txt.indexOf("\"queries\":{") match {
       case -1 => return Map.empty
       case i =>
@@ -262,7 +267,7 @@ object Bench {
     // alone) gets up to SPARK_GRAFT_BENCH_EXTRA (default 2) further
     // reps, stopping as soon as it re-enters the band. Bounded extra
     // cost: only outliers re-run, and only until they converge.
-    val committed = committedRecord(sfDir)
+    val committed = committedRecord(sfDir, cpus)
     val extraCap = sys.env.get("SPARK_GRAFT_BENCH_EXTRA").map(_.trim)
       .flatMap(s => scala.util.Try(s.toInt).toOption)
       .filter(n => n >= 0 && n <= 5).getOrElse(2)

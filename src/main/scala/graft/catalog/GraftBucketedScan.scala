@@ -206,18 +206,15 @@ final case class GraftFilePartition(file: LiveFile) extends GraftFilesPartition 
   * set through `groupFilter` so the ReplaceData commit swaps only those
   * dirs — a copy-on-write UPDATE/MERGE rewrites the touched dirs, not
   * the table. */
-final class GraftFlatBatchScan(table: GraftTable, required: StructType,
+final class GraftFlatBatchScan(table: GraftTable,
+                               // the relation's snapshot: the builder routed
+                               // on it, and the row-level commit guards on it
+                               snap: graft.table.Snapshot,
+                               required: StructType,
                                pushed: Array[Filter],
-                               groupFilter: Option[java.util.concurrent.atomic.AtomicReference[Option[Set[String]]]] = None,
-                               // a pre-read snapshot pins the scan (time
-                               // travel, or the builder's routing check —
-                               // re-reading here would race a concurrent
-                               // commit against the routing decision)
-                               snap0: Option[graft.table.Snapshot] = None)
+                               groupFilter: Option[java.util.concurrent.atomic.AtomicReference[Option[Set[String]]]] = None)
     extends Scan with Batch with SupportsRuntimeV2Filtering
     with SupportsReportStatistics {
-
-  private val snap = snap0.getOrElse(table.snapshot)
 
   // live files grouped by the data dir they belong to (the groups
   // runtime filtering keeps or drops); built once on the driver

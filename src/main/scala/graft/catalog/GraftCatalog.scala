@@ -26,7 +26,8 @@ import java.util
   * DataFrame ([[GraftTable.dfAt]], the plan `toDF` builds) — full
   * filter/column pushdown into vectorized parquet scans; other sessions
   * fall back to the table's V1Scan. Snapshot isolation comes free: each
-  * query plans against the snapshot current at resolution time.
+  * loaded table resolves one snapshot ([[GraftSparkTable.snapshot]]),
+  * and every part of the statement plans against it.
   *
   * Configuration:
   * {{{
@@ -71,8 +72,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       }
       throw new NoSuchTableException(ident)
     }
-    new GraftSparkTable(dirOf(ident),
-      (catalogName +: ident.namespace() :+ ident.name()).mkString("."))
+    tableOf(ident, GraftSparkTable.AtHead)
   }
 
   /** `VERSION AS OF <v>` — a read-only relation pinned to snapshot v. A
@@ -80,24 +80,19 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * `VERSION AS OF 'audited'`. */
   override def loadTable(ident: Identifier, version: String): Table = {
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
-    val v =
-      try version.toInt
-      catch { case _: NumberFormatException =>
-        GraftTable.load(spark, dirOf(ident)).refOf(version).version }
-    new GraftSparkTable(dirOf(ident),
-      (catalogName +: ident.namespace() :+ ident.name()).mkString("."),
-      Some(v))
+    tableOf(ident, GraftSparkTable.atVersionOrRef(version))
   }
 
   /** `TIMESTAMP AS OF <ts>` — resolved to the latest snapshot whose log
     * entry was committed at or before the timestamp (micros, per DSv2). */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
-    val t = GraftTable.load(spark, dirOf(ident))
-    new GraftSparkTable(dirOf(ident),
-      (catalogName +: ident.namespace() :+ ident.name()).mkString("."),
-      Some(t.versionAsOfTimestamp(timestamp / 1000L)))
+    tableOf(ident, GraftSparkTable.AtTime(timestamp / 1000L))
   }
+
+  private def tableOf(ident: Identifier, at: GraftSparkTable.ReadAt): GraftSparkTable =
+    new GraftSparkTable(dirOf(ident),
+      (catalogName +: ident.namespace() :+ ident.name()).mkString("."), at)
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val ns = new Path((warehouse +: namespace).mkString("/"))

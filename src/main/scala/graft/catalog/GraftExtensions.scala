@@ -60,9 +60,9 @@ case class ResolveGraftTables(spark: SparkSession) extends Rule[LogicalPlan] {
     // relation: the partition-reporting GraftBucketedScan is what makes
     // co-bucketed joins shuffle-free, and it matches the view path on
     // pushdown (same parquet reader function). Everything else gets the
-    // `dfAt` plan swap. The snapshot is loaded ONCE per relation per
-    // rule pass (the analyzer iterates to fixpoint; per-check loads would
-    // multiply driver metadata I/O on object stores).
+    // `dfAt` plan swap. Every check and the swap read the table's one
+    // snapshot (GraftSparkTable.snapshot), however often the analyzer
+    // iterates.
     val spjOn = spark.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
       .contains("true")
     // An unresolved `_file`/`_pos` reference anywhere means Spark's
@@ -113,7 +113,7 @@ case class ResolveGraftTables(spark: SparkSession) extends Rule[LogicalPlan] {
             aggExprs.forall(e => GraftCountFold.foldKind(e).isDefined) &&
             GraftCountFold.relationOf(child, writeTargets).isDefined =>
         GraftCountFold.relationOf(child, writeTargets).flatMap { gst =>
-          val snap = gst.readSnapshot
+          val snap = gst.snapshot
           if (snap.deletes.nonEmpty) None
           else {
             val vals: Seq[Option[Any]] = aggExprs.map(e =>
@@ -142,8 +142,7 @@ case class ResolveGraftTables(spark: SparkSession) extends Rule[LogicalPlan] {
           if r.table.isInstanceOf[GraftSparkTable] && !writeTargets.contains(r) &&
             !pendingMetaRef =>
         val gst = r.table.asInstanceOf[GraftSparkTable]
-        val gt = gst.graftTable
-        val snap = gst.readSnapshot(gt)
+        val snap = gst.snapshot
         // metadata columns (`_file`) resolve against the relation's
         // metadataOutput without widening its output — a referenced one
         // means the relation must KEEP its DSv2 scan (the flat Batch scan
@@ -159,17 +158,16 @@ case class ResolveGraftTables(spark: SparkSession) extends Rule[LogicalPlan] {
             case _ => false
           })))
         if (usesMeta || gst.keepScan) r
-        else if (spjOn && gst.asOfVersion.isEmpty && GraftSparkTable.spjEligible(snap)) r
+        else if (spjOn && !gst.pinned && GraftSparkTable.spjEligible(snap)) r
         // pending POSITION deletes key on the reader-stamped (_file, _pos)
         // identity — only the DSv2 reader stamps it; keep that scan, whose
         // delete-aware reader applies them
         else if (snap.deletes.exists(_.keys == graft.table.GraftTable.PosDeleteKeys)) r
-        else GraftViewPlaceholder(r.output, gt.dfAt(snap).queryExecution.analyzed)
+        else GraftViewPlaceholder(r.output, gst.graftTable.dfAt(snap).queryExecution.analyzed)
       case h: GraftViewPlaceholder if h.child.resolved =>
-        // rebind by NAME, not position: the plan was built from the
-        // CURRENT snapshot while h.output was resolved earlier in
-        // analysis — under a concurrent schema change positional zip
-        // would silently mislabel columns; a missing name fails loudly
+        // rebind by NAME, not position: h.output and the plan come from
+        // the same snapshot, but positional zip would silently mislabel
+        // columns if they ever diverged; a missing name fails loudly
         val byName = h.child.output.map(a => a.name.toLowerCase -> a).toMap
         val aliased: Seq[NamedExpression] = h.output.map { o =>
           byName.get(o.name.toLowerCase) match {
@@ -249,8 +247,8 @@ private[catalog] object GraftMvRewrite {
               gst: GraftSparkTable): Option[LogicalPlan] = {
     if (!spark.conf.get("spark.graft.mv.rewrite.enabled", "true").toBoolean)
       return None
-    if (gst.asOfVersion.nonEmpty || gst.keepScan) return None
-    val snap = gst.readSnapshot
+    if (gst.pinned || gst.keepScan) return None
+    val snap = gst.snapshot
     val regs = snap.properties.iterator.collect {
       case (k, v) if k.startsWith(GraftTable.MvRegistrationPrefix) &&
         k != GraftTable.MvBaseVersionProp => v
@@ -457,7 +455,7 @@ private[catalog] object GraftPartitionFold {
             } => (a, vs.map(_.asInstanceOf[CLit].value))
         case _ => return None
       }).getOrElse(Seq.empty)
-    val snap = gst.readSnapshot
+    val snap = gst.snapshot
     if (snap.deletes.nonEmpty) return None
     val cols = (groupAttrs.map(_.name) ++ conjuncts.map(_._1.name))
       .foldLeft(Vector.empty[String])((acc, n) =>

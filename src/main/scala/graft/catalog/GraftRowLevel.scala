@@ -8,7 +8,7 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
-import graft.table.GraftTable
+import graft.table.{GraftTable, Snapshot}
 
 import java.util.UUID
 
@@ -34,16 +34,16 @@ import java.util.UUID
   * replacement rows through [[GraftTable.overwrite]]'s clustering write
   * at commit (one extra write, layout contract kept).
   */
-final class GraftRowLevelOperation(dir: String,
+final class GraftRowLevelOperation(table: GraftTable,
+                                   // the relation's snapshot, which this
+                                   // statement operates on: scan and commit
+                                   // both bind to it, so a concurrent commit
+                                   // mid-statement aborts instead of being
+                                   // silently overwritten by replacement rows
+                                   // computed from stale state
+                                   snap: Snapshot,
                                    cmd: RowLevelOperation.Command)
     extends RowLevelOperation {
-
-  private def spark: SparkSession = SparkSession.active
-
-  // the snapshot this statement operates on: scan and commit both bind
-  // to it, so a concurrent commit mid-statement aborts instead of being
-  // silently overwritten by replacement rows computed from stale state
-  private val baseVersion = GraftTable.load(spark, dir).snapshot.version
 
   // runtime group filter result: the scan records which data dirs
   // actually contain condition-matched rows (None = filter never fired
@@ -53,7 +53,7 @@ final class GraftRowLevelOperation(dir: String,
 
   override def command(): RowLevelOperation.Command = cmd
 
-  override def description(): String = s"GraftRowLevelOperation($cmd, $dir)"
+  override def description(): String = s"GraftRowLevelOperation($cmd, ${table.dir})"
 
   // asking for `_file` is what arms Spark's
   // RowLevelOperationRuntimeGroupFiltering: it computes the DISTINCT
@@ -64,20 +64,20 @@ final class GraftRowLevelOperation(dir: String,
   // whole-table replace
   override def requiredMetadataAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    if (GraftTable.load(spark, dir).schema.fieldNames.contains(GraftMetaCols.FILE))
+    if (snap.schema.fieldNames.contains(GraftMetaCols.FILE))
       Array.empty
     else
       Array(org.apache.spark.sql.connector.expressions.Expressions.column(GraftMetaCols.FILE))
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(GraftTable.load(spark, dir), batchOnly = true,
+    new GraftScanBuilder(table, snap, batchOnly = true,
       pushIntoReader = false, groupFilter = Some(groupFilter))
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
       override def build(): Write = new Write {
         override def toBatch: BatchWrite =
-          new GraftReplaceBatchWrite(dir, info.schema(), baseVersion, groupFilter)
+          new GraftReplaceBatchWrite(table, snap, info.schema(), groupFilter)
       }
     }
 }
@@ -85,30 +85,26 @@ final class GraftRowLevelOperation(dir: String,
 /** Distributed replacement write: parquet files per task + one OCC
   * commit on the driver — a whole-table replace, or, when runtime group
   * filtering fired, a swap of exactly the dirs the scan kept. */
-private final class GraftReplaceBatchWrite(dir: String, querySchema: StructType,
-    baseVersion: Int,
-    groupFilter: java.util.concurrent.atomic.AtomicReference[Option[Set[String]]] =
-      new java.util.concurrent.atomic.AtomicReference(None))
+private final class GraftReplaceBatchWrite(t: GraftTable, snap: Snapshot,
+    querySchema: StructType,
+    groupFilter: java.util.concurrent.atomic.AtomicReference[Option[Set[String]]])
     extends BatchWrite {
 
   private def spark: SparkSession = SparkSession.active
+  private val dir = t.dir
+  private val baseVersion = snap.version
   private val sub = s"data/${UUID.randomUUID()}"
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val snap = GraftTable.load(spark, dir).snapshot
     // physical file schema in the QUERY's column order (rows are
     // positional; names come from this schema)
-    val physSchema = StructType(querySchema.fields.map { f =>
-      StructField(snap.physicalOf(f.name), f.dataType, nullable = true)
-    })
+    val physSchema = GraftStagedFiles.physSchemaOf(snap, querySchema)
     val (factory, conf) = GraftShim.parquetWriterFactory(spark, physSchema)
     new GraftParquetWriterFactory(s"$dir/$sub", physSchema, factory, conf)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val rows = messages.collect { case m: GraftFileCommit => m.rows }.sum
-    val t = GraftTable.load(spark, dir)
-    val snap = t.snapshot
     groupFilter.get() match {
       case Some(replacedDirs) =>
         // runtime group filtering fired: the scan read ONLY these dirs,
@@ -119,9 +115,9 @@ private final class GraftReplaceBatchWrite(dir: String, querySchema: StructType,
           t.commitReplaceDirs(sub, rows, replacedDirs, baseVersion)
         } else {
           val df =
-            if (rows == 0L) t.toDF.limit(0)
+            if (rows == 0L) t.dfAt(snap).limit(0)
             else GraftStagedFiles.readLogical(spark, dir, sub, snap, querySchema)
-          val (csub, crows) = t.writeClustered(df)
+          val (csub, crows) = t.writeClustered(df, snap)
           t.commitReplaceDirs(csub, crows, replacedDirs, baseVersion)
           abort(messages) // raw executor dir was scratch
         }
@@ -132,7 +128,7 @@ private final class GraftReplaceBatchWrite(dir: String, querySchema: StructType,
         // the table's clustering write (partition dirs, key-sorted files) —
         // one extra write, same whole-table-replace semantics
         val df =
-          if (rows == 0L) t.toDF.limit(0)
+          if (rows == 0L) t.dfAt(snap).limit(0)
           else GraftStagedFiles.readLogical(spark, dir, sub, snap, querySchema)
         t.overwriteExpecting(df, baseVersion)
         abort(messages) // raw epoch dir was scratch
@@ -223,24 +219,23 @@ private[catalog] final class GraftParquetWriterFactory(
   * `write.update.mode`). Sequence-number semantics make it sound: the
   * delete file applies to strictly-older commits only, so reinserted
   * rows survive their own key's delete. */
-final class GraftDeltaOperation(dir: String, cmd: RowLevelOperation.Command,
-                                keys: Seq[String])
+final class GraftDeltaOperation(table: GraftTable,
+                                // the snapshot this statement's deltas are
+                                // computed against (see GraftRowLevelOperation)
+                                snap: Snapshot,
+                                cmd: RowLevelOperation.Command)
     extends RowLevelOperation with SupportsDelta {
 
-  private def spark: SparkSession = SparkSession.active
-
-  // snapshot this statement's deltas are computed against (see
-  // GraftRowLevelOperation.baseVersion)
-  private val baseVersion = GraftTable.load(spark, dir).snapshot.version
+  private val keys = snap.key
 
   override def command(): RowLevelOperation.Command = cmd
-  override def description(): String = s"GraftDeltaOperation($cmd, $dir)"
+  override def description(): String = s"GraftDeltaOperation($cmd, ${table.dir})"
 
   // delta scans keep reader pushdown: a row skipped by footer stats just
   // produces no delta (its file is never replaced) — at scale a point
   // UPDATE touches one file, not the table
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(GraftTable.load(spark, dir), batchOnly = true)
+    new GraftScanBuilder(table, snap, batchOnly = true)
 
   override def rowId(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
     keys.map(org.apache.spark.sql.connector.expressions.Expressions.column).toArray
@@ -251,27 +246,26 @@ final class GraftDeltaOperation(dir: String, cmd: RowLevelOperation.Command,
     new DeltaWriteBuilder {
       override def build(): DeltaWrite = new DeltaWrite {
         override def toBatch: DeltaBatchWrite =
-          new GraftDeltaBatchWrite(dir, info.schema(),
-            info.rowIdSchema().orElse(null), keys, baseVersion)
+          new GraftDeltaBatchWrite(table, snap, info.schema(),
+            info.rowIdSchema().orElse(null))
       }
     }
 }
 
 /** Distributed MoR write: per task, one data file + one delete-key file
   * (each created lazily on first row), then one rowDelta commit. */
-private final class GraftDeltaBatchWrite(dir: String, rowSchema: StructType,
-                                         idSchema: StructType, keys: Seq[String],
-                                         baseVersion: Int)
+private final class GraftDeltaBatchWrite(t: GraftTable, snap: Snapshot,
+                                         rowSchema: StructType, idSchema: StructType)
     extends DeltaBatchWrite {
 
   private def spark: SparkSession = SparkSession.active
+  private val dir = t.dir
+  private val keys = snap.key
   private val dataSub = s"data/${UUID.randomUUID()}"
   private val delSub = s"deletes/${UUID.randomUUID()}"
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory = {
-    val snap = GraftTable.load(spark, dir).snapshot
-    def phys(s: StructType) = StructType(s.fields.map(f =>
-      StructField(snap.physicalOf(f.name), f.dataType, nullable = true)))
+    def phys(s: StructType) = GraftStagedFiles.physSchemaOf(snap, s)
     val physRow = phys(rowSchema)
     val physId = phys(Option(idSchema).getOrElse(
       StructType(keys.map(k => snap.schema(k)))))
@@ -286,8 +280,6 @@ private final class GraftDeltaBatchWrite(dir: String, rowSchema: StructType,
     val ms = messages.collect { case m: GraftDeltaCommit => m }
     val dataRows = ms.map(_.dataRows).sum
     val delRows = ms.map(_.delRows).sum
-    val t = GraftTable.load(spark, dir)
-    val snap = t.snapshot
     // partitioned layouts REQUIRE the k=v dirs + in-file derived columns
     // (a bucketed scan lists bucket subdirs; a pruned scan filters the
     // derived column): re-route the delta's data files through the
@@ -298,11 +290,11 @@ private final class GraftDeltaBatchWrite(dir: String, rowSchema: StructType,
       if (snap.spec.isEmpty || dataRows == 0L) dataSub
       else {
         val df = GraftStagedFiles.readLogical(spark, dir, dataSub, snap, rowSchema)
-        val (sub, _) = t.writeClustered(df)
+        val (sub, _) = t.writeClustered(df, snap)
         GraftStagedFiles.deleteDir(spark, dir, dataSub)
         sub
       }
-    t.commitDelta(finalDataSub, dataRows, delSub, delRows, keys, baseVersion)
+    t.commitDelta(finalDataSub, dataRows, delSub, delRows, keys, snap.version)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

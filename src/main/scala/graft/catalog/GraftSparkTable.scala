@@ -12,7 +12,7 @@ import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{BaseRelation, Filter, InsertableRelation, TableScan}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import graft.table.{GraftTable, PartitionField}
+import graft.table.{GraftTable, PartitionField, Snapshot}
 
 import java.util
 import scala.jdk.CollectionConverters._
@@ -35,12 +35,18 @@ import scala.jdk.CollectionConverters._
   * relations for the analyzed plan of the snapshot's
   * [[GraftTable.dfAt]] (full vectorized-scan pushdown). The [[V1Scan]]
   * fallback here keeps catalog reads *correct* on sessions without the
-  * extensions (column pruning pushed, filters forwarded to
-  * [[GraftTable.scan]] for transform/footer skipping, then re-applied by
-  * Spark).
+  * extensions (column pruning pushed, filters forwarded to the
+  * snapshot's pruned scan for transform/footer skipping, then re-applied
+  * by Spark).
+  *
+  * One table is one snapshot: [[snapshot]] is resolved once, at first use
+  * after any pending create, and every callback and analyzer rule reads
+  * it — a statement plans against one version, and only a commit's
+  * concurrency check reads the head again. A DataFrame that keeps this
+  * table keeps that version.
   */
 final class GraftSparkTable(val dir: String, tableName: String,
-                            val asOfVersion: Option[Int] = None,
+                            val at: GraftSparkTable.ReadAt = GraftSparkTable.AtHead,
                             // path write to a location with no table yet:
                             // the table is created ON FIRST WRITE with this
                             // schema/spec — a read of the missing path must
@@ -61,8 +67,11 @@ final class GraftSparkTable(val dir: String, tableName: String,
   private def spark: SparkSession = SparkSession.active
   private def existsOnDisk: Boolean = GraftTable.exists(spark, dir)
   private def isPending: Boolean = pendingCreate.isDefined && !existsOnDisk
-  /** Always-fresh handle; snapshot state lives in the log. */
-  def graftTable: GraftTable = GraftTable.load(spark, dir)
+  lazy val graftTable: GraftTable = GraftTable.load(spark, dir)
+  /** The snapshot this relation reads, resolved once (see the class doc). */
+  lazy val snapshot: Snapshot = GraftSparkTable.resolve(graftTable, at)
+  /** Pinned to a version, ref or commit time: read-only, never streamed. */
+  def pinned: Boolean = at != GraftSparkTable.AtHead
 
   /** Creates the pending table (write path only); no-op when it exists —
     * a concurrent creator winning the race is fine, the write appends to
@@ -73,28 +82,15 @@ final class GraftSparkTable(val dir: String, tableName: String,
       catch { case _: IllegalArgumentException if existsOnDisk => }
   }
 
-  /** The snapshot this relation reads: pinned for `VERSION AS OF` /
-    * `TIMESTAMP AS OF` relations, current otherwise. */
-  def readSnapshot: graft.table.Snapshot = readSnapshot(graftTable)
-
-  /** [[readSnapshot]] through an already-loaded handle of this table. */
-  def readSnapshot(gt: GraftTable): graft.table.Snapshot =
-    asOfVersion.map { v =>
-      val s = gt.snapshotAt(v)
-      require(s.op != "expired",
-        s"snapshot v$v has been expired (expireSnapshots); cannot time travel to it")
-      s
-    }.getOrElse(gt.snapshot)
-
   override def name(): String =
-    tableName + asOfVersion.map(v => s"@v$v").getOrElse("")
+    tableName + (if (pinned && !isPending) s"@v${snapshot.version}" else "")
   /** Upsert-key columns surface as non-nullable — semantically true (a
     * NULL key can never be upsert-matched) and required by Spark's
     * delta-based row-level rewrites (rowId attributes must be non-null;
     * ANSI store assignment guards writes with runtime null checks). */
   override def schema(): StructType = {
     if (isPending) return pendingCreate.get._1
-    val s = readSnapshot
+    val s = snapshot
     StructType(s.schema.fields.map(f =>
       if (s.key.contains(f.name)) f.copy(nullable = false) else f))
   }
@@ -116,7 +112,7 @@ final class GraftSparkTable(val dir: String, tableName: String,
   }
 
   override def partitioning(): Array[Transform] =
-    (if (isPending) pendingCreate.get._2 else readSnapshot.spec).map {
+    (if (isPending) pendingCreate.get._2 else snapshot.spec).map {
       case PartitionField(src, "identity", _) => Expressions.identity(src)
       case PartitionField(src, "bucket", n)   => Expressions.bucket(n, src)
       // Iceberg-exact bucket rides through DSv2 as a named transform;
@@ -138,10 +134,9 @@ final class GraftSparkTable(val dir: String, tableName: String,
       m.put("provider", "graft")
       return m
     }
-    val t = graftTable
-    val s = t.snapshot
+    val s = snapshot
     val m = new util.HashMap[String, String]()
-    m.put("format-version", t.formatVersion.toString)
+    m.put("format-version", s.formatVersion.toString)
     m.put("provider", "graft")
     if (s.key.nonEmpty) m.put("key", s.key.mkString(","))
     if (s.bloomKeys.nonEmpty) m.put("graft.bloom-keys", s.bloomKeys.mkString(","))
@@ -174,13 +169,13 @@ final class GraftSparkTable(val dir: String, tableName: String,
     // missing path must fail HERE, not auto-create an empty table
     if (isPending) throw new IllegalArgumentException(
       s"no graft table at $dir (reads do not create tables)")
-    new GraftScanBuilder(graftTable, asOfVersion,
+    new GraftScanBuilder(graftTable, snapshot, pinned,
       skipReplaceCommits = options.getBoolean("skipReplaceCommits", false),
       maxVersionsPerBatch = Option(options.get("maxVersionsPerBatch")).map(_.toInt))
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    require(asOfVersion.isEmpty, "cannot write to a VERSION/TIMESTAMP AS OF relation")
+    require(!pinned, "cannot write to a VERSION/TIMESTAMP AS OF relation")
     ensureCreated() // a write (and only a write) creates a fresh-path table
     new GraftWriteBuilder(dir, info)
   }
@@ -191,24 +186,23 @@ final class GraftSparkTable(val dir: String, tableName: String,
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
-    require(asOfVersion.isEmpty, "cannot modify a VERSION/TIMESTAMP AS OF relation")
-    val snap = graftTable.snapshot
+    require(!pinned, "cannot modify a VERSION/TIMESTAMP AS OF relation")
     // pending equality deletes are applied reader-side by the row-level
     // scan (size-gated), so MoR DML chains without compacting between
     // statements
     // keyed v2 tables get merge-on-read deltas (a sparse UPDATE writes
     // one key file + one row file); everything else rewrites the group
-    if (snap.key.nonEmpty && snap.formatVersion >= 2)
-      () => new GraftDeltaOperation(dir, info.command, snap.key)
+    if (snapshot.key.nonEmpty && snapshot.formatVersion >= 2)
+      () => new GraftDeltaOperation(graftTable, snapshot, info.command)
     else
-      () => new GraftRowLevelOperation(dir, info.command)
+      () => new GraftRowLevelOperation(graftTable, snapshot, info.command)
   }
 
   // Plain `spark.sql("DELETE FROM graft.ns.t WHERE …")` — Spark routes a
   // fully filter-translatable condition here (copy-on-write through the
   // same snapshot machinery as GraftTable.delete / GraftSql).
   override def canDeleteWhere(filters: Array[sources.Filter]): Boolean =
-    asOfVersion.isEmpty && filters.forall(f => GraftSparkTable.filterToColumn(f).isDefined)
+    !pinned && filters.forall(f => GraftSparkTable.filterToColumn(f).isDefined)
 
   override def deleteWhere(filters: Array[sources.Filter]): Unit = {
     val pred = filters.flatMap(GraftSparkTable.filterToColumn)
@@ -218,12 +212,37 @@ final class GraftSparkTable(val dir: String, tableName: String,
 }
 
 object GraftSparkTable {
+  /** Which snapshot a relation reads: the head, or one pinned by
+    * `VERSION AS OF` (a number or a ref name) or `TIMESTAMP AS OF`. */
+  sealed trait ReadAt
+  case object AtHead extends ReadAt
+  final case class AtVersion(version: Int) extends ReadAt
+  final case class AtRef(name: String) extends ReadAt
+  final case class AtTime(millis: Long) extends ReadAt
+
+  /** `VERSION AS OF` text: a number is a version, anything else a ref. */
+  def atVersionOrRef(v: String): ReadAt =
+    v.trim.toIntOption.map(AtVersion(_)).getOrElse(AtRef(v.trim))
+
+  /** The one resolver of a relation's snapshot; a pinned version that
+    * expiry has marked fails here, before anything is planned. */
+  def resolve(t: GraftTable, at: ReadAt): Snapshot = {
+    val v = at match {
+      case AtHead => return t.snapshot
+      case AtVersion(n) => n
+      case AtRef(name) => t.refOf(name).version
+      case AtTime(ms) => t.versionAsOfTimestamp(ms)
+    }
+    val s = t.snapshotAt(v)
+    require(s.op != "expired",
+      s"snapshot v$v has been expired (expireSnapshots); cannot time travel to it")
+    s
+  }
+
   /** A table reads through [[GraftBucketedScan]] (partition-reporting
     * Batch) when its layout is exactly one bucket field with no pending
     * equality deletes — the storage-partitioned-join shape. */
-  def spjEligible(t: GraftTable): Boolean = spjEligible(t.snapshot)
-
-  def spjEligible(s: graft.table.Snapshot): Boolean =
+  def spjEligible(s: Snapshot): Boolean =
     s.spec.length == 1 && s.spec.head.transform == "bucket" &&
       s.deletes.isEmpty && s.dataDirs.nonEmpty &&
       // spec evolution: a dir written under an older spec has a different
@@ -311,18 +330,22 @@ private final class GraftWriteBuilder(dir: String, info: LogicalWriteInfo)
 }
 
 /** Fallback read: prunes columns at the source, forwards convertible
-  * filters to [[GraftTable.scan]] (transform pruning + parquet footer
-  * skipping), and reports everything as residual so Spark re-applies the
-  * full predicate — pushdown is an optimization here, never a contract. */
-private[catalog] final class GraftScanBuilder(table: GraftTable,
-    asOf: Option[Int] = None, batchOnly: Boolean = false,
+  * filters to the snapshot's pruned scan (transform pruning + parquet
+  * footer skipping), and reports everything as residual so Spark
+  * re-applies the full predicate — pushdown is an optimization here,
+  * never a contract. Every routing decision (SPJ eligibility,
+  * metadata-column shadowing, position-delete routing), the size
+  * estimate and the rows read come from `snap`, the relation's one
+  * snapshot; `pinned` relations (time travel) take neither the bucketed
+  * scan nor a stream. */
+private[catalog] final class GraftScanBuilder(table: GraftTable, snap: Snapshot,
+    pinned: Boolean = false, batchOnly: Boolean = false,
     skipReplaceCommits: Boolean = false, pushIntoReader: Boolean = true,
     maxVersionsPerBatch: Option[Int] = None,
     groupFilter: Option[java.util.concurrent.atomic.AtomicReference[Option[Set[String]]]] = None)
     extends ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
 
-  private var required: StructType =
-    asOf.map(v => table.snapshotAt(v).schema).getOrElse(table.schema)
+  private var required: StructType = snap.schema
   private var accepted: Array[Filter] = Array.empty
   private var pred: Option[SCol] = None
 
@@ -343,20 +366,12 @@ private[catalog] final class GraftScanBuilder(table: GraftTable,
 
   override def build(): Scan = {
     // row-level operations plan their scan as a real Batch (no V1 path)
-    if (batchOnly) return new GraftFlatBatchScan(table, required, accepted, groupFilter)
-    // ONE snapshot read feeds every routing decision below (SPJ
-    // eligibility, metadata-column shadowing, position-delete routing)
-    // AND the scan that wins: separate reads would pay up to three log
-    // round-trips per planned query on an object store, and would let a
-    // concurrent commit (e.g. add-column of a '_file' data column, or a
-    // rowDelta) land BETWEEN the decision and the pinned snapshot,
-    // making them inconsistent.
-    val routeSnap = asOf.map(table.snapshotAt).getOrElse(table.snapshot)
+    if (batchOnly) return new GraftFlatBatchScan(table, snap, required, accepted, groupFilter)
     // single-bucket-spec tables with no deletes get the partition-reporting
     // Batch scan, unlocking storage-partitioned (shuffle-free) joins
     // (current-snapshot reads only; version-pinned reads take the V1 path)
-    if (asOf.isEmpty && GraftSparkTable.spjEligible(routeSnap))
-      return new GraftBucketedScan(table, routeSnap, required, accepted,
+    if (!pinned && GraftSparkTable.spjEligible(snap))
+      return new GraftBucketedScan(table, snap, required, accepted,
         skipReplaceCommits, maxVersionsPerBatch)
     // a METADATA `_file`/`_pos` request needs the DSv2 reader (it stamps
     // real file paths / row positions and applies deletes reader-side;
@@ -364,45 +379,35 @@ private[catalog] final class GraftScanBuilder(table: GraftTable,
     // and has no position at all). A DATA column of the same name
     // shadows its metadata column and reads normally. Pending POSITION
     // deletes force the same route: only the stamping reader can apply a
-    // delete keyed on (_file, _pos). Both pin the snapshot they checked.
+    // delete keyed on (_file, _pos).
     val wantsMeta = Seq(GraftMetaCols.FILE, GraftMetaCols.POS).exists(m =>
-      required.fieldNames.contains(m) && !routeSnap.schema.fieldNames.contains(m))
+      required.fieldNames.contains(m) && !snap.schema.fieldNames.contains(m))
     val hasPosDeletes =
-      routeSnap.deletes.exists(_.keys == graft.table.GraftTable.PosDeleteKeys)
+      snap.deletes.exists(_.keys == graft.table.GraftTable.PosDeleteKeys)
     if (wantsMeta || hasPosDeletes)
-      return new GraftFlatBatchScan(table, required, accepted,
-        snap0 = Some(routeSnap))
+      return new GraftFlatBatchScan(table, snap, required, accepted)
     val schema = required
-    val filter = pred
-    val pinned = asOf
-    val filters = accepted
-    val skipReplace = skipReplaceCommits
-    val maxPerBatch = maxVersionsPerBatch
-    val t = table
     new V1Scan {
       override def readSchema(): StructType = schema
       override def toMicroBatchStream(checkpointLocation: String)
           : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-        require(pinned.isEmpty, "cannot stream a VERSION/TIMESTAMP AS OF relation")
-        new GraftMicroBatchStream(t, schema, filters, skipReplace, maxPerBatch)
+        require(!pinned, "cannot stream a VERSION/TIMESTAMP AS OF relation")
+        new GraftMicroBatchStream(table, schema, accepted, skipReplaceCommits,
+          maxVersionsPerBatch)
       }
       override def toV1TableScan[T <: BaseRelation with TableScan](context: SQLContext): T =
         new BaseRelation with TableScan {
           override def sqlContext: SQLContext = context
           override def schema: StructType = readSchema()
           // real file sizes (metadata-only listing) of the snapshot the
-          // routing read instead of the never-broadcast default — small
-          // graft dims broadcast in joins
-          override def sizeInBytes: Long = t.dataSizeBytes(routeSnap) max 1L
-          override def buildScan(): RDD[Row] = {
+          // rows come from, instead of the never-broadcast default —
+          // small graft dims broadcast in joins
+          override def sizeInBytes: Long = table.dataSizeBytes(snap) max 1L
+          override def buildScan(): RDD[Row] =
             // (a metadata `_file` request never reaches this V1 path —
             // build() routes it to the flat Batch scan above)
-            val base = pinned match {
-              case Some(v) => filter.foldLeft(table.asOf(v))(_ filter _)
-              case None    => filter.map(table.scan).getOrElse(table.toDF)
-            }
-            base.select(readSchema().fieldNames.toIndexedSeq.map(n => col(s"`$n`")): _*).rdd
-          }
+            pred.fold(table.dfAt(snap))(table.scanAt(snap, _))
+              .select(readSchema().fieldNames.toIndexedSeq.map(n => col(s"`$n`")): _*).rdd
         }.asInstanceOf[T]
     }
   }

@@ -74,8 +74,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
     // a write to a fresh path (batch save or stream start) has no table
     // yet — getTable() below creates it from the query's schema
     if (meta.isDefined || !GraftTable.exists(spark, dir)) return Array.empty
-    val t = GraftTable.load(spark, dir)
-    new graft.catalog.GraftSparkTable(t.dir, s"graft.`${t.dir}`").partitioning()
+    new graft.catalog.GraftSparkTable(dir, s"graft.`$dir`").partitioning()
   }
 
   override def supportsExternalMetadata(): Boolean = true
@@ -103,16 +102,12 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
         // ORIGINAL-case map — DSv2 options are case-insensitive, so look
         // up through CaseInsensitiveStringMap
         val opts = new CaseInsensitiveStringMap(properties)
-        val asOf = Option(opts.get("versionAsOf")).map { v =>
-            // numeric snapshot version, or a named ref (tag/branch)
-            try v.trim.toInt
-            catch { case _: NumberFormatException =>
-              GraftTable.load(spark, dir).refOf(v.trim).version }
-          }
+        import graft.catalog.GraftSparkTable.{AtHead, AtRef, AtTime, atVersionOrRef}
+        val at = Option(opts.get("versionAsOf")).map(atVersionOrRef) // number or ref
           .orElse(Option(opts.get("branch")).orElse(Option(opts.get("tag")))
-            .map(r => GraftTable.load(spark, dir).refOf(r.trim).version))
+            .map(r => AtRef(r.trim)))
           .orElse(Option(opts.get("timestampAsOf")).map { ts =>
-            val millis =
+            AtTime(
               try ts.trim.toLong
               catch { case _: NumberFormatException =>
                 // wall-clock strings resolve in the SESSION time zone
@@ -123,10 +118,10 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
                   .atZone(java.time.ZoneId.of(spark.conf.get(
                     "spark.sql.session.timeZone",
                     java.util.TimeZone.getDefault.getID)))
-                  .toInstant.toEpochMilli }
-            GraftTable.load(spark, dir).versionAsOfTimestamp(millis)
+                  .toInstant.toEpochMilli })
           })
-        new graft.catalog.GraftSparkTable(dir, s"graft.`$dir`", asOf, pending,
+          .getOrElse(AtHead)
+        new graft.catalog.GraftSparkTable(dir, s"graft.`$dir`", at, pending,
           keepScan = Option(opts.get("keepScan")).exists(_.trim.equalsIgnoreCase("true")))
     }
   }

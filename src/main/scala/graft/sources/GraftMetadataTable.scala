@@ -11,14 +11,17 @@ import graft.table.GraftTable
 
 import java.util
 
-/** Read-only table for a `path#<meta>` metadata read: resolves one of the
+/** Read-only table for a `path#<meta>` metadata read: one of the
   * snapshot-log-derived DataFrames ([[GraftTable.history]] /
-  * `snapshots` / `manifests` / `files`) — always fresh at scan time, all
-  * O(snapshots + tracked dirs) metadata, never row data. */
+  * `snapshots` / `manifests` / `files` / `refs` / `partitions`), all
+  * O(snapshots + tracked dirs) metadata, never row data. Like a
+  * [[graft.catalog.GraftSparkTable]], the table is one read of the log:
+  * the frame is built once, at first use, and its schema and every scan
+  * serve it. */
 final class GraftMetadataTable(dir: String, meta: String)
     extends Table with SupportsRead {
 
-  private def frame: DataFrame =
+  private lazy val frame: DataFrame =
     GraftMetadataTable.frameOf(GraftTable.load(SparkSession.active, dir), meta)
 
   override def name(): String = s"graft.`$dir#$meta`"
@@ -29,14 +32,13 @@ final class GraftMetadataTable(dir: String, meta: String)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder {
       override def build(): Scan = new V1Scan {
-        private val df = frame
-        override def readSchema(): StructType = df.schema
+        override def readSchema(): StructType = frame.schema
         override def toV1TableScan[T <: BaseRelation with TableScan](
             context: SQLContext): T =
           new BaseRelation with TableScan {
             override def sqlContext: SQLContext = context
-            override def schema: StructType = df.schema
-            override def buildScan(): RDD[Row] = df.rdd
+            override def schema: StructType = frame.schema
+            override def buildScan(): RDD[Row] = frame.rdd
           }.asInstanceOf[T]
       }
     }

@@ -661,8 +661,17 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     * (statement-level retry = serializable). Row-PRESERVING rewrites
     * fold through safely: the replacement carries the complete logical
     * content either way. */
-  def overwrite(df: DataFrame): GraftTable = {
-    val s = snapshot
+  def overwrite(df: DataFrame): GraftTable = { replaceFrom(snapshot, df); this }
+
+  /** The one whole-table copy-on-write commit: writes `df`, which the
+    * caller derived from `s` (or which does not depend on the table),
+    * and commits it as the table's only data dir, guarded on that same
+    * `s`. A caller that builds `df` from [[dfAt]]`(s)` reads the head
+    * once per attempt; one that read the table again for its guard could
+    * pass a commit landing in between — say, during a MERGE's
+    * cardinality job — and silently drop it (the lost update
+    * `CompactionChurnHammerSpec` and `MergeLostUpdateSpec` pin). */
+  private def replaceFrom(s: Snapshot, df: DataFrame): Unit = {
     val (sub, rows) = writeData(df, s)
     dropDirOnRace(sub) {
       commit(s.version + 1)((rebase, v) => {
@@ -683,7 +692,6 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
           deletes = Seq.empty)
       })
     }
-    this
   }
 
   /** Runs a commit whose data dir `sub` is already on disk; if the commit
@@ -704,7 +712,7 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     * commit), recompute the WHOLE statement against the fresh snapshot —
     * the result is as if the statement ran after the concurrent commit,
     * i.e. serializable. The body must re-read table state itself (all
-    * in-repo callers rebuild from `toDF`/`snapshot` per attempt). */
+    * in-repo callers resolve one `snapshot` per attempt). */
   private def retryCow[A](what: String)(body: => A): A = {
     val maxAttempts = 5
     var n = 0
@@ -1237,7 +1245,7 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     scanAt(s, pred)
   }
 
-  private def scanAt(s: Snapshot, pred: Column): DataFrame = {
+  private[graft] def scanAt(s: Snapshot, pred: Column): DataFrame = {
     if (s.deletes.nonEmpty || s.dataDirs.isEmpty) return dfAt(s).filter(pred)
     val live = rangeLiveDirs(s, bloomLiveDirs(s, pred), pred)
     if (live.isEmpty) return emptyDF(s)
@@ -1931,30 +1939,12 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
 
   /** Compaction: rewrite live rows into one data dir, dropping delete
     * files (the maintenance action a 100 TB deployment runs continuously).
-    *
-    * Pins ONE snapshot for both the rewrite content and the conflict
-    * guard. The previous shape — `overwrite(toDF)` — read `snapshot`
-    * TWICE (once lazily inside toDF, once inside overwrite's guard): a
-    * rowDelta committing in that window passed the guard's version check
-    * while the rewritten content predated it, silently overwriting the
-    * rowDelta away (lost update; found by CompactionChurnHammerSpec). */
+    * One snapshot per attempt feeds both the content and the conflict
+    * guard ([[replaceFrom]]). */
   def compact(): GraftTable = {
     retryCow("compact") {
-      val s = snapshot // the ONLY head read per attempt
-      val (sub, rows) = writeData(dfAt(s), s)
-      dropDirOnRace(sub) {
-        commit(s.version + 1)((rebase, v) => {
-          val b = Option(rebase).getOrElse(s)
-          requireSpecStable(b, s)
-          if (b.version != s.version)
-            throw new GraftTable.ConcurrentOverwriteException(
-              s"concurrent commit during compaction (table advanced " +
-                s"v${s.version} -> v${b.version}); retry the statement")
-          b.copy(version = v, op = "overwrite",
-            dataDirs = if (rows != 0) Seq(DataDir(sub, v, rows)) else Seq.empty,
-            deletes = Seq.empty)
-        })
-      }
+      val s = snapshot
+      replaceFrom(s, dfAt(s))
     }
     this
   }
@@ -2013,8 +2003,8 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
   /** Clustering write of `df` into a fresh data dir WITHOUT a commit —
     * for DSv2 paths that re-route raw executor output through the
     * partition/sort layout and then stamp their own commit shape. */
-  private[graft] def writeClustered(df: DataFrame): (String, Long) =
-    writeData(df, snapshot)
+  private[graft] def writeClustered(df: DataFrame, s: Snapshot): (String, Long) =
+    writeData(df, s)
 
   /** [[overwrite]] guarded on the snapshot the caller derived `df` from —
     * the layout-maintaining half of the row-level replace path. */
@@ -2373,26 +2363,24 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     // ref-pinned versions (tags/branches) survive expiry along with the
     // dirs they reference — dropping a ref makes its snapshot expirable
     val pinned = refs.map(_.version).toSet
-    val keepSnaps = ((cutoff to cur) ++ pinned.filter(_ < cutoff)).map(snapshotAt)
+    val kept = pinned.filter(_ < cutoff).toSeq.sorted
+    val keepSnaps = ((cutoff to cur) ++ kept).map(snapshotAt)
     val live: Set[String] =
       keepSnaps.flatMap(s => s.dataDirs.map(_.path) ++ s.deletes.map(_.path)).toSet
     val f = fs
-    (0 until cutoff).filterNot(pinned.contains).foreach { v =>
-      // an already-expired entry has no dirs left: re-marking it is
-      // pure log I/O that would grow with every call
-      val entry = if (log.hasEntry(v)) Some(snapshotAt(v)) else None
-      entry.filter(_.op != "expired").foreach { s =>
-        val toDelete = (s.dataDirs.map(_.path) ++ s.deletes.map(_.path))
-          .filterNot(live.contains)
-        // MARKER FIRST, data delete second (an atomic replace — readers
-        // only ever see valid JSON). A crash between the two leaves
-        // unreferenced dirs that vacuumOrphans sweeps and readers that
-        // see the clean "expired" error; the old delete-first order left
-        // a readable snapshot referencing deleted files — time travel
-        // failed with file-not-found instead of "expired".
-        log.replaceEntry(v, s.copy(op = "expired", dataDirs = Seq.empty, deletes = Seq.empty))
-        toDelete.foreach(rel => f.delete(new Path(dir, rel), true))
-      }
+    // only entries no earlier expiry marked: the log's watermark makes
+    // this O(newly expired), not O(table age)
+    log.unexpired(cutoff, pinned).foreach { case (v, s) =>
+      val toDelete = (s.dataDirs.map(_.path) ++ s.deletes.map(_.path))
+        .filterNot(live.contains)
+      // MARKER FIRST, data delete second (an atomic replace — readers
+      // only ever see valid JSON). A crash between the two leaves
+      // unreferenced dirs that vacuumOrphans sweeps and readers that
+      // see the clean "expired" error; the old delete-first order left
+      // a readable snapshot referencing deleted files — time travel
+      // failed with file-not-found instead of "expired".
+      log.expireEntry(v, s.copy(op = "expired", dataDirs = Seq.empty, deletes = Seq.empty), kept)
+      toDelete.foreach(rel => f.delete(new Path(dir, rel), true))
     }
     this
   }
@@ -2724,7 +2712,7 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
     * snapshot committed). */
   private def cowRewrite(pred: Column, f: DataFrame => DataFrame): GraftTable = {
     val s = snapshot
-    def full(): GraftTable = overwrite(f(toDF))
+    def full(): GraftTable = { replaceFrom(s, f(dfAt(s))); this }
     if (s.deletes.nonEmpty || s.dataDirs.size <= 1) return full()
     val bloomLive = bloomLiveDirs(s, pred)
     // spec evolution: each dir group prunes under ITS OWN spec (a dir
@@ -2788,10 +2776,11 @@ final class GraftTable private (val spark: SparkSession, val dir: String) {
               notMatchedBySource: Seq[graft.dml.MergeClause] = Seq.empty,
               validateCardinality: Boolean = true): GraftTable =
     retryCow("merge") {
-      // toDF re-binds to the fresh snapshot on every retry attempt
-      val merged = graft.dml.MergePlanner.mergeOn(toDF, source, keyPairs, matched,
-        notMatched, notMatchedBySource, validateCardinality)
-      overwrite(merged)
+      // one snapshot per attempt for the target rows and the guard
+      val s = snapshot
+      replaceFrom(s, graft.dml.MergePlanner.mergeOn(dfAt(s), source, keyPairs, matched,
+        notMatched, notMatchedBySource, validateCardinality))
+      this
     }
 
   // ---- metadata tables (S4/S6/D8) -------------------------------------
@@ -3142,9 +3131,11 @@ object GraftTable {
     t
   }
 
+  /** A handle on the table at `dir`; fails when there is none. It
+    * reads no snapshot: each operation resolves its own. */
   def load(spark: SparkSession, dir: String): GraftTable = {
     val t = new GraftTable(spark, dir)
-    t.snapshot // force validation
+    if (!t.log.exists) throw new java.io.FileNotFoundException(s"no graft table at $dir")
     t
   }
 
@@ -3369,8 +3360,7 @@ object GraftTable {
     mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root)
   }
 
-  private[table] def readSnapshot(json: String): Snapshot = {
-    val n = mapper.readTree(json)
+  private[table] def readSnapshot(n: JsonNode): Snapshot = {
     def arr(f: String): Seq[JsonNode] = n.get(f).asInstanceOf[ArrayNode].asScala.toSeq
     Snapshot(
       version = n.get("version").asInt(),

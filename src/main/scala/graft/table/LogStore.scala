@@ -1,6 +1,7 @@
 package graft.table
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
@@ -169,20 +170,65 @@ private[table] final class LogStore(root: Path, conf: Configuration) {
       try os.write(v.toString.getBytes(UTF_8)) finally os.close()
     } catch { case _: Exception => }
 
-  def entry(v: Int): Snapshot = {
+  def entry(v: Int): Snapshot = parsedEntry(v)._2
+
+  /** Entry `v` as JSON and as a snapshot. */
+  private def parsedEntry(v: Int): (JsonNode, Snapshot) = {
     val bytes = read(slot(v))
-    try GraftTable.readSnapshot(new String(bytes, UTF_8))
-    catch { case e: Exception =>
+    try {
+      val n = mapper.readTree(bytes)
+      (n, GraftTable.readSnapshot(n))
+    } catch { case e: Exception =>
       throw new IllegalStateException(s"unreadable snapshot entry ${path(slot(v))}", e)
     }
   }
 
-  def hasEntry(v: Int): Boolean = fs.exists(path(slot(v)))
   def entryMtime(v: Int): Long = fs.getFileStatus(path(slot(v))).getModificationTime
   def publishEntry(v: Int, s: Snapshot): Boolean =
     publish(slot(v), GraftTable.writeSnapshot(s).getBytes(UTF_8))
-  def replaceEntry(v: Int, s: Snapshot): Unit =
-    replace(slot(v), GraftTable.writeSnapshot(s).getBytes(UTF_8))
+
+  // ---- expiry -------------------------------------------------------------
+
+  /** Replaces entry `v` with its expiry `marker`, which also records the
+    * expiry's watermark: `kept`, the versions below its cutoff that a ref
+    * kept. Written compact: nobody reads a marker by eye. */
+  def expireEntry(v: Int, marker: Snapshot, kept: Seq[Int]): Unit = {
+    val n = mapper.readTree(GraftTable.writeSnapshot(marker)).asInstanceOf[ObjectNode]
+    val k = n.putArray(KeptField)
+    kept.foreach(k.add(_))
+    replace(slot(v), mapper.writeValueAsBytes(n))
+  }
+
+  /** The entries below `cutoff` that expiry has not marked, except the
+    * `pinned` versions, oldest first — the order [[expireEntry]] must
+    * mark them in. Reads O(newly expired) entries: the walk goes down
+    * from `cutoff - 1` and stops at the newest marker. Markers are
+    * written oldest first, so every entry below that one was marked
+    * then, except the versions its watermark says a ref kept; of those,
+    * the ones no ref pins any more are read. A marker without a
+    * watermark (written before expiry kept one) sends the walk on down. */
+  def unexpired(cutoff: Int, pinned: Set[Int]): Seq[(Int, Snapshot)] = {
+    val found = Seq.newBuilder[(Int, Snapshot)]
+    var v = cutoff - 1
+    while (v >= 0) {
+      if (!pinned(v)) {
+        val (n, s) = parsedEntry(v)
+        if (s.op != "expired") found += v -> s
+        else if (n.has(KeptField)) {
+          n.get(KeptField).forEach { k =>
+            val kv = k.asInt()
+            if (kv < v && !pinned(kv)) {
+              val ks = entry(kv)
+              if (ks.op != "expired") found += kv -> ks
+            }
+          }
+          v = 0
+        }
+      }
+      v -= 1
+    }
+    found.result().sortBy(_._1)
+  }
 
   // ---- refs and staged markers ------------------------------------------
 
@@ -291,6 +337,8 @@ private[table] final class LogStore(root: Path, conf: Configuration) {
 
 private[table] object LogStore {
   private val mapper = new ObjectMapper()
+  /** An expiry marker's watermark field (see [[LogStore.expireEntry]]). */
+  private val KeptField = "expiryKeptBelowCutoff"
 
   def apply(spark: SparkSession, tableDir: String): LogStore =
     new LogStore(new Path(tableDir, "_graft_log"), spark.sparkContext.hadoopConfiguration)

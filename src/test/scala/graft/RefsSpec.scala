@@ -112,6 +112,30 @@ class RefsSpec extends AnyFunSuite {
     assert(t.snapshotAt(1).op == "expired")
   }
 
+  test("expiry reads only newly expired entries, and still expires a dropped ref's version") {
+    val dir = TestSpark.tmpDir("refs-exp-watermark")
+    val t = GraftTable.create(spark, dir, schema)
+    (1 to 4).foreach(i => t.overwrite(Seq((i.toLong, s"v$i")).toDF("id", "v"))) // v1..v4
+    t.createTag("keep2", 2)
+    t.expireSnapshots(keepLast = 1)
+    assert((0 to 3).map(t.snapshotAt(_).op) == Seq("expired", "expired", "overwrite", "expired"))
+    // an entry an earlier expiry marked is never read again: make v0
+    // unreadable, and later expiries must not touch it
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_graft_log", "v00000.json"),
+      "{}".getBytes("UTF-8"))
+    t.overwrite(Seq((5L, "v5")).toDF("id", "v")) // v5
+    t.expireSnapshots(keepLast = 1)
+    assert(t.snapshotAt(4).op == "expired")
+    assert(t.snapshotAt(2).op == "overwrite", "a tagged version must survive expiry")
+    // dropping the tag makes v2 expirable, though it lies below every
+    // cutoff an expiry already passed
+    t.dropRef("keep2")
+    t.expireSnapshots(keepLast = 1)
+    assert(t.snapshotAt(2).op == "expired")
+    assert(!new java.io.File(dir, t.snapshotAt(5).dataDirs.head.path).list().isEmpty)
+    assert(t.toDF.as[(Long, String)].collect().toSeq == Seq((5L, "v5")))
+  }
+
   test("VERSION AS OF a ref name and read options resolve through refs") {
     val dir = TestSpark.tmpDir("refs-sql")
     val t = GraftTable.create(spark, dir, schema)

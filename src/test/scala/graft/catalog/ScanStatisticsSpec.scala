@@ -53,13 +53,13 @@ class ScanStatisticsSpec extends AnyFunSuite with BeforeAndAfterAll {
       StructType(Seq(StructField("k", LongType), StructField("v", StringType))),
       key = Seq("k"), formatVersion = 2)
     t.append((1L to 50L).map(i => (i, s"v$i")).toDF("k", "v"))
-    val clean = new GraftFlatBatchScan(t, t.schema, Array.empty)
+    val clean = new GraftFlatBatchScan(t, t.snapshot, t.schema, Array.empty)
     val st0 = clean.estimateStatistics()
     assert(st0.numRows().getAsLong == 50L)
     assert(st0.sizeInBytes().getAsLong > 0)
     // a pending equality delete makes the logged count an upper bound
     t.rowDelta(Seq(1L).toDF("k"), Seq.empty[(Long, String)].toDF("k", "v"), Seq("k"))
-    val mor = new GraftFlatBatchScan(t, t.schema, Array.empty)
+    val mor = new GraftFlatBatchScan(t, t.snapshot, t.schema, Array.empty)
     assert(!mor.estimateStatistics().numRows().isPresent)
     assert(mor.estimateStatistics().sizeInBytes().getAsLong > 0)
   }
@@ -113,12 +113,12 @@ class ScanStatisticsSpec extends AnyFunSuite with BeforeAndAfterAll {
       StructType(Seq(StructField("k", LongType), StructField("v", StringType))))
     t.append((1L to 50L).map(i => (i, s"v$i")).toDF("k", "v"))             // v1
     val atBuild = t.dataSizeBytes(t.snapshot)
-    val built = new GraftScanBuilder(t).build()
+    val built = new GraftScanBuilder(t, t.snapshot).build()
     t.append((51L to 100L).map(i => (i, s"v$i")).toDF("k", "v"))           // v2
     assert(t.dataSizeBytes(t.snapshot) > atBuild)
     assert(sizeOf(built) == atBuild, "size read a snapshot newer than the routed one")
     // a versionAsOf read made after the later append sizes its own version
-    assert(sizeOf(new GraftScanBuilder(t, asOf = Some(1)).build()) == atBuild)
-    assert(sizeOf(new GraftScanBuilder(t).build()) == t.dataSizeBytes(t.snapshot))
+    assert(sizeOf(new GraftScanBuilder(t, t.snapshotAt(1), pinned = true).build()) == atBuild)
+    assert(sizeOf(new GraftScanBuilder(t, t.snapshot).build()) == t.dataSizeBytes(t.snapshot))
   }
 }
